@@ -19,6 +19,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """Half of physical RAM: local mode runs every executor inside the
+    driver JVM, and a heap larger than the machine gets the JVM killed
+    by the OS instead of failing a task."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def build_session(
     app_name: str = "lakehouse-engine",
     master: str | None = None,
@@ -56,7 +64,10 @@ def build_session(
         # partitions a merge touches (SURVEY §2 K1 engine mapping).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -25,7 +25,7 @@ This is the engine's rebuild of the reference's Hudi table semantics
   filtered reads prune files before Spark ever lists them.
 
 Scale design (100 TB): the merge is a single shuffle-free candidate scan
-+ one shuffled anti-join bounded by the affected files, not the table;
++ one shuffled anti-join bounded by the touched files, not the table;
 inserts of non-overlapping key ranges touch zero existing files; AQE
 handles skewed keys in the join; ``maxRecordsPerFile`` + the compaction
 service keep file sizes in the reference's 100 MB–1 GB band.
@@ -73,7 +73,7 @@ BUCKET_COL = "_bucket_id"
 CHECKPOINT_EVERY = 10
 # Range-prune only pays for itself past this many live files: under it the
 # prune's one-job min/max agg exceeds what an unpruned (column-pruned)
-# affected-files scan costs. See Table._prune_by_keys.
+# touched-files scan costs. See Table._prune_by_keys.
 PRUNE_MIN_FILES = 16
 # sentinel prefix for the CDC op-code raise_error gate: apply_cdc_feed
 # matches it in the captured Spark exception text to re-raise the
@@ -1746,15 +1746,24 @@ class Table:
         ignored by readers and the cleaner. Default 0 = fail loud
         (single-writer deployments keep the race a hard error).
 
-        COW merge plan (all Spark-side, bounded by affected files):
-        1. within-batch dedup: max(precombine) per key wins (Q10 kernel);
-        2. manifest-stats prune current files to key-range candidates;
-        3. semi-join candidates × batch keys → affected files;
-        4. survivors = affected-file rows ∖ batch keys (anti-join),
-           keeping their original ``_commit_time``;
-        5. write survivors ∪ batch as the new commit's files; manifest
-           removes affected files, adds the new ones (manifest-last =
-           atomic publish).
+        COW rewrite kernel — every COW mutation (upsert, merge, delete,
+        delete_where, update_where, partial_update, merge_into,
+        apply_cdc_feed) commits through the same four steps, all
+        Spark-side and bounded by the files the commit touches:
+        1. prune the live files to candidates (key-range / bucket /
+           bloom / record-index stats for keyed writes, manifest stats
+           or partition values for predicates);
+        2. :meth:`_touched`: one provenance-tagged scan of the
+           candidates, semi-joined to the batch keys or filtered by the
+           predicate, collects the files holding a matching row;
+        3. :meth:`_rewrite`: read only those files, apply the caller's
+           transform (anti-join the keys, or filter / ``when`` on the
+           predicate) — rows it leaves alone keep their original
+           ``_commit_time`` — and union the new rows (for an upsert, the
+           batch deduped by max(precombine) per key);
+        4. write the result as the new commit's files and publish a
+           manifest that adds them and removes the touched files
+           (manifest-last = atomic publish).
 
         MOR tables instead append the deduped batch as DELTA files — no
         read, no rewrite, O(batch) write cost (the Hudi MERGE_ON_READ
@@ -1768,14 +1777,10 @@ class Table:
         attempts = max(0, occ_retries) + 1
         for i in range(attempts):
             try:
-                if self.table_type == "mor":
-                    # MOR deltas race too (the commit-id allocation), but
-                    # the retry is O(batch) — no merge to re-run; close to
-                    # Hudi 1.0's non-blocking concurrency for append-only
-                    # delta writers
-                    return self._delta_write(
-                        df, batch_id=batch_id, sink_id=sink_id
-                    )
+                # MOR deltas race too (the commit-id allocation), but the
+                # retry is O(batch) — no merge to re-run; close to Hudi
+                # 1.0's non-blocking concurrency for append-only delta
+                # writers
                 return self._merge_write(
                     df, action="upsert", batch_id=batch_id, sink_id=sink_id
                 )
@@ -1852,23 +1857,6 @@ class Table:
             return _cmp(newest_unscoped)
         return False
 
-    def _delta_write(
-        self,
-        df: DataFrame,
-        batch_id: str | None = None,
-        sink_id: str | None = None,
-    ) -> str:
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df).withColumn(META_COL, F.lit(commit))
-        added = self._write_files(batch, commit, kind="delta")
-        self._publish(
-            commit, "deltacommit", added, [], batch.schema,
-            batch_id=batch_id, sink_id=sink_id,
-        )
-        return commit
-
     def insert(
         self,
         df: DataFrame,
@@ -1891,11 +1879,7 @@ class Table:
             batch_id, sink_id
         ):
             return None
-        self._validate_batch(df, need_precombine=dedup_batch)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df) if dedup_batch else df
-        stamped = batch.withColumn(META_COL, F.lit(commit))
+        _, commit, stamped = self._stage_batch(df, dedup=dedup_batch)
         added = self._write_files(stamped, commit)
         self._publish(
             commit, "insert", added, [], stamped.schema,
@@ -1906,12 +1890,8 @@ class Table:
     def bulk_insert(self, df: DataFrame) -> str:
         """Sorted bulk load (Hudi 'bulk_insert'): key-sorted files →
         tight key-range stats → better pruning on later upserts."""
-        self._validate_batch(df, need_precombine=False)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        stamped = df.withColumn(META_COL, F.lit(commit)).sortWithinPartitions(
-            self.key
-        )
+        _, commit, stamped = self._stage_batch(df, dedup=False)
+        stamped = stamped.sortWithinPartitions(self.key)
         added = self._write_files(stamped, commit)
         self._publish(commit, "bulk_insert", added, [], stamped.schema)
         return commit
@@ -1935,10 +1915,7 @@ class Table:
         plus a normal file write — old files stay readable for time
         travel until cleaned.
         """
-        self._validate_batch(df, need_precombine=False)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        stamped = df.withColumn(META_COL, F.lit(commit))
+        _, commit, stamped = self._stage_batch(df, dedup=False)
         parts = self.meta.get("partition_fields") or []
         entries = self.current_files()
 
@@ -2036,44 +2013,26 @@ class Table:
         return commit
 
     def delete(self, keys_df: DataFrame) -> str:
-        """Delete by key. COW: rewrite of affected files minus the keys
-        (anti-join). MOR: append a TOMBSTONE delta (key + ``_deleted``) —
-        newest-commit-wins ordering makes it shadow every earlier version
-        at merge time; compaction physically drops the keys."""
-        if self.table_type == "mor":
-            commit = self._next_commit()
-            tomb = (
-                keys_df.select(self.key)
-                .distinct()
-                .withColumn(META_COL, F.lit(commit))
-                .withColumn("_deleted", F.lit(True))
-            )
-            added = self._write_files(tomb, commit, kind="delta")
-            self._publish(commit, "deltacommit", added, [], None)
-            return commit
+        """Delete by key. COW: the rewrite kernel (see :meth:`upsert`)
+        anti-joins the keys out of the touched files. MOR: append a
+        TOMBSTONE delta (key + ``_deleted``) — newest-commit-wins ordering
+        makes it shadow every earlier version at merge time; compaction
+        physically drops the keys."""
         commit = self._next_commit()
+        if self.table_type == "mor":
+            return self._delta_commit(commit, tomb_keys=keys_df.select(self.key))
         # no .distinct(): the COW consumers (envelope agg, semi-join,
         # anti-join, membership probes) are all duplicate-tolerant, so
-        # the exchange it costs buys nothing (the MOR tombstone branch
-        # above keeps its distinct — tomb ROWS must be one per key)
+        # the exchange it costs buys nothing (the MOR tombstone keeps
+        # its distinct — tomb ROWS must be one per key)
         keys = keys_df.select(self.key)
-        entries = self.current_files()
-        candidates = self._prune_by_keys(entries, keys)
-        if not candidates:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        existing = self._with_file(candidates)
-        affected = self._affected_files(existing, keys)
-        if not affected:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        survivors = self._read_entries(
-            self._affected_entries(candidates, affected)
-        ).join(keys, self.key, "left_anti")
-        added = self._write_files(survivors, commit)
-        removed = self._to_rel(affected)
-        self._publish(commit, "delete", added, removed, survivors.schema)
-        return commit
+        touched = self._touched(
+            self._prune_by_keys(self.current_files(), keys), keys
+        )
+        return self._rewrite(
+            commit, "delete", touched,
+            lambda rows: rows.join(keys, self.key, "left_anti"),
+        )
 
     def delete_where(
         self, condition, filters: dict[str, Any] | None = None
@@ -2086,12 +2045,10 @@ class Table:
         stats (same contract as :meth:`snapshot`) — at 10⁵ files a
         partition- or range-correlated delete prunes before any I/O.
 
-        COW plan: scan (pruned) files once with per-row file provenance,
-        find the files that actually CONTAIN matching rows, rewrite only
-        those files minus the matches — untouched files keep their
-        original ``_commit_time``, like :meth:`delete`. MOR: tombstone
-        delta of the matching keys from the merged view, O(matches)
-        append, no rewrite.
+        COW: the rewrite kernel (see :meth:`upsert`) drops the matching
+        rows from the touched files. MOR: tombstone delta of the
+        matching keys from the merged view, O(matches) append, no
+        rewrite.
 
         Partition-aligned fast path (COW, string conditions): when
         EVERY top-level conjunct is ``partition_col <op> literal``, a
@@ -2110,10 +2067,9 @@ class Table:
         if self.table_type == "mor":
             return self.delete(self.snapshot(filters=filters).where(cond))
         commit = self._next_commit()
-        entries = self.current_files()
-        candidates = entries
+        candidates = self.current_files()
         if filters:
-            candidates = [e for e in entries if _stats_match(e, filters)]
+            candidates = [e for e in candidates if _stats_match(e, filters)]
         full_drop: list[str] = []
         if candidates and isinstance(condition, str):
             ops = _full_partition_pred(
@@ -2132,27 +2088,11 @@ class Table:
                     else:
                         rest.append(e)
                 candidates = rest
-        if not candidates and not full_drop:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        affected: list[str] = []
-        if candidates:
-            tagged = self._with_file(candidates)
-            affected = [
-                r["_file"]
-                for r in tagged.where(cond).select("_file").distinct().collect()
-            ]
-        if not affected:
-            self._publish(commit, "delete", [], full_drop, None)
-            return commit
-        survivors = (
-            self._read_entries(self._affected_entries(candidates, affected))
-            .where(~F.coalesce(cond, F.lit(False)))
+        return self._rewrite(
+            commit, "delete", self._touched(candidates, cond),
+            lambda rows: rows.where(~F.coalesce(cond, F.lit(False))),
+            removed=full_drop,
         )
-        added = self._write_files(survivors, commit)
-        removed = self._to_rel(affected) + full_drop
-        self._publish(commit, "delete", added, removed, survivors.schema)
-        return commit
 
     def _validate_update_targets(self, cols) -> None:
         """Shared UPDATE SET target contract (used by update_where AND
@@ -2189,13 +2129,11 @@ class Table:
         narrows the scanned file set via manifest stats like
         :meth:`snapshot`.
 
-        COW plan: one provenance-tagged scan finds the files CONTAINING
-        matches; only those rewrite, matching rows restamped with the
-        new commit, non-matching rows in the same files byte-preserved
-        with their original ``_commit_time``. MOR: the matching rows
-        from the merged view are transformed and appended as a delta
-        commit — newest-commit-wins at read applies the update,
-        O(matches) write cost."""
+        COW: the rewrite kernel (see :meth:`upsert`) restamps the
+        matching rows of the touched files with the new commit. MOR: the
+        matching rows from the merged view are transformed and appended
+        as a delta commit — newest-commit-wins at read applies the
+        update, O(matches) write cost."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         sets = {
             c: (F.expr(e) if isinstance(e, str) else e)
@@ -2207,38 +2145,25 @@ class Table:
             updated = matched.select(
                 *[sets.get(c, F.col(c)).alias(c) for c in matched.columns]
             )
-            return self._delta_write(updated)
+            return self._merge_write(updated, action="update")
         commit = self._next_commit()
-        entries = self.current_files()
-        candidates = entries
+        candidates = self.current_files()
         if filters:
-            candidates = [e for e in entries if _stats_match(e, filters)]
-        affected: list[str] = []
-        if candidates:
-            tagged = self._with_file(candidates)
-            affected = [
-                r["_file"]
-                for r in tagged.where(cond).select("_file").distinct().collect()
-            ]
-        if not affected:
-            self._publish(commit, "update", [], [], None)
-            return commit
-        base = self._read_entries(self._affected_entries(candidates, affected))
+            candidates = [e for e in candidates if _stats_match(e, filters)]
         hit = F.coalesce(cond, F.lit(False))
-        out = base.select(
-            *[
-                F.when(hit, F.lit(commit)).otherwise(F.col(c)).alias(c)
-                if c == META_COL
-                else F.when(hit, sets[c]).otherwise(F.col(c)).alias(c)
-                if c in sets
-                else F.col(c)
-                for c in base.columns
-            ]
+        return self._rewrite(
+            commit, "update", self._touched(candidates, cond),
+            lambda rows: rows.select(
+                *[
+                    F.when(hit, F.lit(commit)).otherwise(F.col(c)).alias(c)
+                    if c == META_COL
+                    else F.when(hit, sets[c]).otherwise(F.col(c)).alias(c)
+                    if c in sets
+                    else F.col(c)
+                    for c in rows.columns
+                ]
+            ),
         )
-        added = self._write_files(out, commit)
-        removed = self._to_rel(affected)
-        self._publish(commit, "update", added, removed, out.schema)
-        return commit
 
     def restore(self, as_of: str) -> str:
         """Roll the table back to its state at commit ``as_of`` — a new
@@ -2324,15 +2249,12 @@ class Table:
         - all other source rows upsert (matched → replace, unmatched →
           insert), with within-batch max(precombine) resolution.
 
-        One pass over the affected files only — same cost envelope as
-        :meth:`upsert`.
+        Same commit path and cost envelope as :meth:`upsert`; the
+        deleted keys join the rewrite's key set (COW) or land as
+        tombstones in the same delta commit (MOR).
         """
         if delete_col is None:
             return self.upsert(source)
-        # NULL delete flag = not a delete (MERGE INTO semantics: an
-        # unflagged row updates/inserts). Without the coalesce both
-        # branches evaluate to NULL and the row silently vanishes.
-        flag = F.coalesce(F.col(delete_col), F.lit(False))
         # The upsert branch and the tombstone branch each scan ``source``
         # — for a non-deterministic lineage (sample(), uuid()-derived
         # flags) independent re-evaluation could drop a row from BOTH
@@ -2343,7 +2265,7 @@ class Table:
 
         source = source.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            return self._merge_with_deletes(source, flag, delete_col)
+            return self._merge_write(source, "merge", delete_col=delete_col)
         finally:
             source.unpersist()
 
@@ -2376,7 +2298,7 @@ class Table:
         window. Sidecar cost is O(deletes in window), never O(table).
 
         Cost: one window shuffle over the BATCH (never the table) +
-        the merge envelope (affected files only).
+        the merge envelope (touched files only).
         """
         from pyspark.sql.window import Window as W
 
@@ -2636,67 +2558,6 @@ class Table:
         ]
         return keep
 
-    def _merge_with_deletes(
-        self, source: DataFrame, flag, delete_col: str
-    ) -> str:
-        if self.table_type == "mor":
-            # MOR merge = ONE delta commit carrying both the upsert rows
-            # and the tombstones (one file set, one manifest): an
-            # incremental reader can never observe a torn merge where
-            # updates landed but deletes haven't (the old two-commit
-            # shape, removed r6). The read-side merge reconciles; no
-            # rewrite. A key both flagged and unflagged in the source
-            # resolves to DELETE (the order the two commits used to
-            # apply), enforced by the anti-join below.
-            upserts = source.where(~flag).drop(delete_col)
-            self._validate_batch(upserts)
-            upserts = self._gate_constraints(upserts)
-            commit = self._next_commit()
-            batch = self._dedup_batch(upserts).withColumn(
-                META_COL, F.lit(commit)
-            )
-            tomb_keys = source.where(flag).select(self.key).distinct()
-            batch = batch.join(tomb_keys, self.key, "left_anti")
-            tomb = tomb_keys.withColumn(META_COL, F.lit(commit)).withColumn(
-                "_deleted", F.lit(True)
-            )
-            out = batch.withColumn("_deleted", F.lit(False)).unionByName(
-                tomb, allowMissingColumns=True
-            )
-            added = self._write_files(out, commit, kind="delta")
-            # manifest schema stays tombstone-free (the MOR read path
-            # widens it, _read_entries) — same contract as delete()
-            self._publish(commit, "deltacommit", added, [], batch.schema)
-            return commit
-        cow_upserts = source.where(~flag).drop(delete_col)
-        self._validate_batch(cow_upserts)  # same gate as the MOR branch
-        upserts = self._dedup_batch(self._gate_constraints(cow_upserts))
-        commit = self._next_commit()
-        batch = upserts.withColumn(META_COL, F.lit(commit))
-        all_keys = (
-            # both update and delete keys affect files; no .distinct()
-            # — every consumer is duplicate-tolerant (see _merge_write)
-            source.select(self.key)
-        )
-        entries = self.current_files()
-        out = batch
-        removed: list[str] = []
-        if entries:
-            candidates = self._prune_by_keys(entries, all_keys)
-            if candidates:
-                existing = self._with_file(candidates)
-                affected = self._affected_files(existing, all_keys)
-                if affected:
-                    survivors = self._read_entries(
-                        self._affected_entries(candidates, affected)
-                    ).join(all_keys, self.key, "left_anti")
-                    out = survivors.unionByName(batch, allowMissingColumns=True)
-                    removed = self._to_rel(affected)
-        # deleted keys simply don't reappear in the rewrite
-        added = self._write_files(out, commit)
-        self._publish(commit, "merge", added, removed, out.schema)
-        return commit
-
     def merge_into(
         self,
         source: DataFrame,
@@ -2738,15 +2599,15 @@ class Table:
         ONLY the target (there is no source row; ANSI agrees), enforced
         fail-closed on any ``<source_alias>.`` occurrence.
 
-        COW cost envelope: when ON carries a target-key equality as a
-        conjunct, manifest key-range stats prune the scanned file set
-        first (the upsert envelope — at 10⁵ files a point-merge touches
-        a handful); then one provenance-tagged scan finds files
-        CONTAINING matches, only those rewrite (non-matching rows in
-        them byte-preserved), inserts append — same shape as
-        :meth:`update_where`. The not-matched anti-join shuffles
-        source-vs-pruned-target once on the ON columns; at 100 TB both
-        sides hash-partition and AQE broadcasts whichever is small.
+        COW cost envelope: the rewrite kernel (see :meth:`upsert`), with
+        the clauses as the transform and the inserts as the new rows.
+        When ON carries a target-key equality as a conjunct, manifest
+        key-range stats prune the candidates (at 10⁵ files a point-merge
+        touches a handful); the touched files come from the same single
+        aggregate that runs the cardinality check. The not-matched
+        anti-join shuffles source-vs-pruned-target once on the ON
+        columns; at 100 TB both sides hash-partition and AQE broadcasts
+        whichever is small.
         A ``not_matched_by_source`` clause CHANGES this envelope: any
         target row anywhere may be claimed, so the key prune is
         disabled and every live file rewrites (the unavoidable cost of
@@ -3171,16 +3032,17 @@ class Table:
                 F.col(on_key_col).alias(self.key)
             )
             candidates = self._prune_by_keys(entries, src_keys)
-        affected: list[str] = []
+        rewrite_entries: list[dict] = []
         if candidates and matched:
-            tagged = self._with_file(candidates).alias(ta)
+            tagged = self._read_entries(candidates, with_file=True).alias(ta)
             pairs = tagged.join(src, on_cond, "inner").select(
                 F.col(f"{ta}.{self.key}").alias("__mi_k"), "_file"
             )
             # ONE Spark job answers both metadata questions (per-commit
             # cost is job count, r6 profile): max matches per target key
-            # (cardinality gate) and the distinct affected-file list
-            # (manifest-bounded) come from a single two-level aggregate.
+            # (cardinality gate) and the distinct touched-file list
+            # (manifest-bounded) come from a single two-level aggregate —
+            # the one place touched files are found outside _touched.
             stats = pairs.groupBy("__mi_k").agg(
                 F.count(F.lit(1)).alias("__mi_n"),
                 F.collect_set("_file").alias("__mi_f"),
@@ -3197,24 +3059,83 @@ class Table:
                     "matched by more than one source row while a WHEN "
                     "MATCHED clause exists — dedup the source first"
                 )
-            affected = list(row["files"] or [])
-        # A by-source clause widens the rewrite to EVERY candidate file
-        # (any unmatched target row may be claimed — the documented cost
-        # of the clause family); otherwise only files containing ON
-        # matches rewrite.
-        rewrite_entries = (
-            candidates
-            if not_matched_by_source
-            else (
-                self._affected_entries(candidates, affected)
-                if affected
-                else []
+            files = set(self._to_rel(row["files"] or []))
+            rewrite_entries = [e for e in candidates if e["path"] in files]
+        if not_matched_by_source:
+            # a by-source clause widens the rewrite to EVERY candidate
+            # file (any unmatched target row may be claimed — the
+            # documented cost of the clause family)
+            rewrite_entries = candidates
+        if not rewrite_entries and not not_matched:
+            # evolving no-op merges still record the widened schema
+            self._publish(
+                commit, "merge", [], [], table_schema if evolved else None
             )
-        )
-        out_parts = []
-        removed: list[str] = []
-        if rewrite_entries:
-            aff = _widen(self._read_entries(rewrite_entries)).alias(ta)
+            return commit
+        ins_rows = None
+        ins_keys = None
+        coll_removed: list[str] = []
+        if not_matched:
+            if candidates:
+                # a target row outside `candidates` can't match any
+                # source row (key-range disjoint), so the anti-join's
+                # target side shrinks with the same prune
+                tgt_all = self._read_entries(candidates).alias(ta)
+                unmatched = src.join(tgt_all, on_cond, "left_anti")
+            else:
+                unmatched = src
+            # Duplicate unmatched keys in the source must collapse to
+            # ONE inserted row (max precombine, the upsert contract) —
+            # inserting both would break the keyed snapshot invariant.
+            # The MOR branch gets this via merge()'s _dedup_batch; give
+            # the COW insert set the same treatment. Inserts are NEW
+            # rows entering the table, so the write-side constraint
+            # gate applies to them (the rewritten rows stay ungated —
+            # quarantining rows the table already owns on a rewrite
+            # would be spurious data loss).
+            ins_src = self._gate_constraints(_insert_rows(unmatched))
+            ins_rows = (
+                self._dedup_batch(ins_src)
+                .withColumn(META_COL, F.lit(commit))
+                .select(*table_cols)
+            )
+            # Keyed-table semantics for colliding inserts: when ON is
+            # not pure key equality (or INSERT VALUES computes a fresh
+            # key), an unmatched source row can insert a key the table
+            # ALREADY holds. The keyed snapshot can never carry
+            # duplicates, so such an insert REPLACES the stored row —
+            # the same resolution the MOR read-side merge applies.
+            # Skipped (provably collision-free, no extra jobs) in the
+            # common shape: ON is key equality and every insert clause
+            # assigns the key from that same source column.
+            if not self._mi_inserts_collision_free(
+                on, on_key_col, not_matched, ta, sa
+            ):
+                # key multiset from the gated PRE-dedup frame (the
+                # _merge_write discipline): the anti-join/prune/semi-
+                # join consumers are duplicate-tolerant, and deriving
+                # from the deduped rows would replay the dedup groupBy
+                # per consumer
+                ins_keys = ins_src.select(self.key)
+                rewritten = {e["path"] for e in rewrite_entries}
+                remaining = [e for e in entries if e["path"] not in rewritten]
+                coll = (
+                    self._touched(
+                        self._prune_by_keys(remaining, ins_keys), ins_keys
+                    )
+                    if remaining
+                    else []
+                )
+                if coll:
+                    ins_rows = (
+                        _widen(self._read_entries(coll))
+                        .join(ins_keys, self.key, "left_anti")
+                        .unionByName(ins_rows)
+                    )
+                    coll_removed = [e["path"] for e in coll]
+
+        def apply_clauses(rows: DataFrame) -> DataFrame:
+            aff = _widen(rows).alias(ta)
             if matched:
                 # the cardinality gate above guarantees <= 1 source
                 # match per target row, so the left join cannot fan out
@@ -3278,83 +3199,16 @@ class Table:
                     if val is not None:
                         expr = F.when(F.col("__mi_bi") == i, val).otherwise(expr)
                 cols.append(expr.alias(c))
-            out_parts.append(j.where(keep).select(*cols))
-            removed = [e["path"] for e in rewrite_entries]
-        if not_matched:
-            if candidates:
-                # a target row outside `candidates` can't match any
-                # source row (key-range disjoint), so the anti-join's
-                # target side shrinks with the same prune
-                tgt_all = self._read_entries(candidates).alias(ta)
-                unmatched = src.join(tgt_all, on_cond, "left_anti")
-            else:
-                unmatched = src
-            # Duplicate unmatched keys in the source must collapse to
-            # ONE inserted row (max precombine, the upsert contract) —
-            # inserting both would break the keyed snapshot invariant.
-            # The MOR branch gets this via merge()'s _dedup_batch; give
-            # the COW insert set the same treatment. Inserts are NEW
-            # rows entering the table, so the write-side constraint
-            # gate applies to them (the rewrite rows above stay
-            # ungated — quarantining rows the table already owns on a
-            # rewrite would be spurious data loss).
-            ins_src = self._gate_constraints(_insert_rows(unmatched))
-            ins = self._dedup_batch(ins_src).withColumn(
-                META_COL, F.lit(commit)
-            )
-            # Keyed-table semantics for colliding inserts: when ON is
-            # not pure key equality (or INSERT VALUES computes a fresh
-            # key), an unmatched source row can insert a key the table
-            # ALREADY holds. The keyed snapshot can never carry
-            # duplicates, so such an insert REPLACES the stored row —
-            # the same resolution the MOR read-side merge applies.
-            # Skipped (provably collision-free, no extra jobs) in the
-            # common shape: ON is key equality and every insert clause
-            # assigns the key from that same source column.
-            if not self._mi_inserts_collision_free(
-                on, on_key_col, not_matched, ta, sa
-            ):
-                # key multiset from the gated PRE-dedup frame (the
-                # _merge_write discipline): the anti-join/prune/semi-
-                # join consumers are duplicate-tolerant, and deriving
-                # from ``ins`` would replay the dedup groupBy per
-                # consumer
-                ins_keys = ins_src.select(self.key)
-                if out_parts:
-                    out_parts[0] = out_parts[0].join(
-                        ins_keys, self.key, "left_anti"
-                    )
-                rewritten = {e["path"] for e in rewrite_entries}
-                remaining = [e for e in entries if e["path"] not in rewritten]
-                coll_cand = (
-                    self._prune_by_keys(remaining, ins_keys) if remaining else []
-                )
-                coll = (
-                    self._affected_files(self._with_file(coll_cand), ins_keys)
-                    if coll_cand
-                    else []
-                )
-                if coll:
-                    surv2 = _widen(
-                        self._read_entries(
-                            self._affected_entries(coll_cand, coll)
-                        )
-                    ).join(ins_keys, self.key, "left_anti")
-                    out_parts.append(surv2)
-                    removed = [*removed, *self._to_rel(coll)]
-            out_parts.append(ins.select(*table_cols))
-        if not out_parts:
-            # evolving no-op merges still record the widened schema
-            self._publish(
-                commit, "merge", [], [], table_schema if evolved else None
-            )
-            return commit
-        out = out_parts[0]
-        for p in out_parts[1:]:
-            out = out.unionByName(p)
-        added = self._write_files(out, commit)
-        self._publish(commit, "merge", added, removed, out.schema)
-        return commit
+            out = j.where(keep).select(*cols)
+            # a colliding insert replaces the rewritten row too
+            if ins_keys is not None:
+                out = out.join(ins_keys, self.key, "left_anti")
+            return out
+
+        return self._rewrite(
+            commit, "merge", rewrite_entries, apply_clauses,
+            new_rows=ins_rows, removed=coll_removed,
+        )
 
     def alter_partition_spec(self, fields: list[str]) -> str:
         """Partition-spec evolution (Iceberg's signature capability): new
@@ -3725,68 +3579,36 @@ class Table:
         unchanged, original ``_commit_time`` kept) — late-arriving data
         can't clobber newer state. Equal precombine → incoming wins.
 
-        Same cost envelope as :meth:`upsert` — stats-pruned candidates,
-        one semi-join to find affected files, one rewrite of those files
-        only. The column merge is a single key-equi join between the
-        affected rows and the (deduped) batch: at 100 TB both sides
+        COW: the rewrite kernel (see :meth:`upsert`), with the column
+        merge as the transform — a single key-equi join between the
+        touched rows and the (deduped) batch: at 100 TB both sides
         shuffle on the key once, and the batch side is usually the small
         one (AQE broadcasts it).
 
         MOR tables (r13, lifting the r12 COW-only limitation): the
         column merge resolves at WRITE time against the merge view of
-        the affected files — never read-side, so the O(1)-column merge
+        the touched files — never read-side, so the O(1)-column merge
         view is untouched. Winning matched rows and new keys append as
         FULL-ROW deltas (newest commit, so the unchanged merge view
         picks them); losing matched rows are simply not emitted (the
         stored winner already lives in the base/delta chain — no
-        rewrite obligation on MOR). Cost: O(affected files) read +
+        rewrite obligation on MOR). Cost: O(touched files) read +
         O(batch) delta write — the read the COW path pays too, minus
-        its O(affected) rewrite.
+        its O(touched) rewrite.
         """
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df)
+        df, commit, batch = self._stage_batch(df)
         table_schema = self._schema()
         entries = self.current_files()
         if table_schema is None or not entries:
             # first write: nothing to merge against
-            stamped = batch.withColumn(META_COL, F.lit(commit))
-            added = self._write_files(stamped, commit)
-            self._publish(commit, "partial_update", added, [], stamped.schema)
+            added = self._write_files(batch, commit)
+            self._publish(commit, "partial_update", added, [], batch.schema)
             return commit
-        update_cols = [c for c in batch.columns if c != self.key]
-        # key multiset from the raw gated frame (see _merge_write): all
-        # consumers (prune agg, semi/anti joins, membership probes) are
-        # duplicate-tolerant, and deriving from ``batch`` would replay
-        # the dedup groupBy per consumer
+        update_cols = [c for c in batch.columns if c not in (self.key, META_COL)]
+        # key multiset from the gated frame (see _merge_write)
         keys = df.select(self.key)
-        out = None
-        removed: list[str] = []
-        candidates = self._prune_by_keys(entries, keys)
-        affected: list[str] = []
-        if candidates:
-            existing = self._with_file(candidates)
-            affected = self._affected_files(existing, keys)
-        if affected:
-            aff_rows = self._read_entries(
-                self._affected_entries(candidates, affected)
-            )
-            if self.table_type == "mor":
-                # current value per affected key = the merge view over
-                # the affected files (every version of an affected key
-                # lives in an affected file, by definition of affected)
-                aff_rows = self._merge_view(aff_rows)
-                survivors = None  # nothing rewrites, nothing retires
-            else:
-                survivors = aff_rows.join(keys, self.key, "left_anti")
-                removed = self._to_rel(affected)
-            matched_old = aff_rows.join(keys, self.key, "left_semi")
-        else:
-            survivors = None
-            matched_old = self._read_entries([]).limit(0)
-            if self.table_type == "mor" and "_deleted" in matched_old.columns:
-                matched_old = matched_old.drop("_deleted")
+        touched = self._touched(self._prune_by_keys(entries, keys), keys)
+        mor = self.table_type == "mor"
         # One full-outer join on the key merges columns: batch-carried
         # columns coalesce (batch non-null wins), omitted columns come
         # from the old row (null for brand-new keys).
@@ -3798,7 +3620,6 @@ class Table:
         # (same contract as _dedup_batch); equal precombine → incoming
         # wins (the engine's upsert tie bias). A losing matched row is
         # rewritten byte-identical, keeping its original _commit_time.
-        o, n = matched_old.alias("_o"), batch.alias("_n")
         old_pc, new_pc = (
             F.col(f"_o.{self.precombine}"),
             F.col(f"_n.{self.precombine}"),
@@ -3807,8 +3628,9 @@ class Table:
         # new-key guard, an old row with NULL precombine and no batch
         # counterpart would evaluate coalesce(null, true) and get its
         # _commit_time restamped, spuriously surfacing in incremental /
-        # CDC reads. The semi-join above makes that unreachable today;
-        # the guard keeps the predicate correct on its own terms.
+        # CDC reads. The semi-join on the old side makes that
+        # unreachable today; the guard keeps the predicate correct on
+        # its own terms.
         batch_wins = F.col(f"_o.{self.key}").isNull() | (
             F.col(f"_n.{self.key}").isNotNull()
             & F.coalesce(new_pc >= old_pc, old_pc.isNull())
@@ -3845,29 +3667,45 @@ class Table:
                 merged_cols.append(
                     F.when(batch_wins, F.col(f"_n.{c}")).alias(c)
                 )
-        joined = o.join(
-            n, F.col(f"_o.{self.key}") == F.col(f"_n.{self.key}"),
-            "full_outer",
-        )
-        if self.table_type == "mor":
-            # losers drop (the stored winner stays in the chain);
-            # winners + new keys append as full-row deltas
-            merged = joined.where(batch_wins).select(*merged_cols)
-        else:
-            merged = joined.select(*merged_cols)
-        out = (
-            merged
-            if survivors is None
-            else survivors.unionByName(merged, allowMissingColumns=True)
-        )
-        if self.table_type == "mor":
-            added = self._write_files(out, commit, kind="delta")
-            self._publish(commit, "partial_update", added, [], out.schema)
-        else:
-            added = self._write_files(out, commit)
-            self._publish(
-                commit, "partial_update", added, removed, out.schema
+
+        def merged(matched_old: DataFrame) -> DataFrame:
+            joined = matched_old.alias("_o").join(
+                batch.alias("_n"),
+                F.col(f"_o.{self.key}") == F.col(f"_n.{self.key}"),
+                "full_outer",
             )
+            # MOR: losers drop (the stored winner stays in the chain);
+            # winners + new keys append as full-row deltas
+            return (joined.where(batch_wins) if mor else joined).select(
+                *merged_cols
+            )
+
+        # the old side when no file is touched: every batch key is new
+        nothing = self._read_entries([]).limit(0)
+        if "_deleted" in nothing.columns:  # MOR read schema
+            nothing = nothing.drop("_deleted")
+        if not mor:
+            return self._rewrite(
+                commit, "partial_update", touched,
+                lambda rows: rows.join(keys, self.key, "left_anti").unionByName(
+                    merged(rows.join(keys, self.key, "left_semi")),
+                    allowMissingColumns=True,
+                ),
+                new_rows=None if touched else merged(nothing),
+            )
+        # MOR: the current value per touched key is the merge view over
+        # the touched files (every version of a touched key lives in a
+        # touched file, by definition of touched); nothing rewrites
+        old = (
+            self._merge_view(self._read_entries(touched)).join(
+                keys, self.key, "left_semi"
+            )
+            if touched
+            else nothing
+        )
+        out = merged(old)
+        added = self._write_files(out, commit, kind="delta")
+        self._publish(commit, "partial_update", added, [], out.schema)
         return commit
 
     # -- write internals -------------------------------------------------
@@ -3980,6 +3818,14 @@ class Table:
             )
         return tagged.where(F.size("_viol") == 0).drop("_viol")
 
+    def _constraints_hold(self):
+        """The row predicate :meth:`_gate_constraints` lets through:
+        every declared constraint true (false and NULL both fail)."""
+        ok = F.lit(True)
+        for expr in (self.meta.get("constraints") or {}).values():
+            ok = ok & F.coalesce(F.expr(expr), F.lit(False))
+        return ok
+
     def _dedup_batch(self, df: DataFrame) -> DataFrame:
         # max(precombine) per key wins; equal precombine → last row in
         # batch order wins (deterministic within a run, like Hudi's
@@ -4020,75 +3866,163 @@ class Table:
             .select("_best.*")
         )
 
+    def _stage_batch(
+        self, df: DataFrame, dedup: bool = True
+    ) -> tuple[DataFrame, str, DataFrame]:
+        """The write preamble shared by every batch write: validate,
+        constraint-gate, allocate the commit id, resolve within-batch
+        duplicates (``dedup``; precombine is required only then) and
+        stamp. Returns (gated frame, commit, stamped batch)."""
+        self._validate_batch(df, need_precombine=dedup)
+        df = self._gate_constraints(df)
+        commit = self._next_commit()
+        batch = self._dedup_batch(df) if dedup else df
+        return df, commit, batch.withColumn(META_COL, F.lit(commit))
+
     def _merge_write(
         self,
-        df: DataFrame,
+        source: DataFrame,
         action: str,
+        delete_col: str | None = None,
         batch_id: str | None = None,
         sink_id: str | None = None,
     ) -> str:
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df).withColumn(META_COL, F.lit(commit))
+        """The keyed write behind upsert, merge and apply_cdc_feed:
+        ``source`` rows upsert, and with ``delete_col`` the rows whose
+        flag is true delete their key instead (a NULL flag is not a
+        delete — MERGE INTO semantics). COW rewrites through the kernel
+        (see :meth:`upsert`); MOR appends one delta commit."""
+        upserts, tomb_keys = source, None
+        if delete_col is not None:
+            flag = F.coalesce(F.col(delete_col), F.lit(False))
+            upserts = source.where(~flag).drop(delete_col)
+        df, commit, batch = self._stage_batch(upserts)
+        if delete_col is not None:
+            tomb_keys = source.where(flag).select(self.key)
+        if self.table_type == "mor":
+            return self._delta_commit(
+                commit, batch, tomb_keys, batch_id=batch_id, sink_id=sink_id
+            )
+        # Key set from the GATED rows (a quarantined update must not
+        # touch its stored row), not the deduped batch, and with no
+        # .distinct(): every consumer below is duplicate-tolerant —
+        # min/max envelope agg, bloom/record-index membership, the
+        # touched-files LEFT SEMI join and the survivors LEFT ANTI join
+        # all give identical results on a multiset of keys. Deriving
+        # keys from ``batch`` instead made each of those consumers
+        # replay the full-width dedup groupBy shuffle (measured: 3 extra
+        # dedup executions per merge commit); from the gated rows they
+        # replay only a column-pruned scan, and dropping the distinct
+        # removes one exchange from every consumer. (An explicit persist
+        # of the deduped batch was also tried: the cache write + static-
+        # partition cache reads cost MORE than the recomputation at
+        # every probed size — 1.05-1.35x slower, reverted.)
+        keys = df.select(self.key)
+        if delete_col is not None:
+            # plus the delete keys, in ONE scan of the source (a union of
+            # two scans would cost an extra Spark job)
+            keys = source.where(flag | self._constraints_hold()).select(
+                self.key
+            )
         entries = self.current_files()
+        touched = (
+            self._touched(self._prune_by_keys(entries, keys), keys)
+            if entries
+            else []
+        )
+        return self._rewrite(
+            commit, action, touched,
+            lambda rows: rows.join(keys, self.key, "left_anti"),
+            new_rows=batch, batch_id=batch_id, sink_id=sink_id,
+        )
+
+    def _delta_commit(
+        self,
+        commit: str,
+        batch: DataFrame | None = None,
+        tomb_keys: DataFrame | None = None,
+        **publish_kw,
+    ) -> str:
+        """One MOR delta commit carrying the stamped upsert rows and the
+        tombstones of ``tomb_keys`` (one file set, one manifest): an
+        incremental reader never observes a torn merge where updates
+        landed but deletes haven't. A key both upserted and tombstoned
+        resolves to DELETE. The read-side merge reconciles; nothing is
+        rewritten."""
         out = batch
-        removed: list[str] = []
-        if entries:
-            # Key set from the RAW gated frame, not the deduped batch,
-            # and with no .distinct(): every consumer below is
-            # duplicate-tolerant — min/max envelope agg, bloom/record-
-            # index membership, the affected-files LEFT SEMI join and
-            # the survivors LEFT ANTI join all give identical results on
-            # a multiset of keys. Deriving keys from ``batch`` instead
-            # made each of those consumers replay the full-width dedup
-            # groupBy shuffle (measured: 3 extra dedup executions per
-            # merge commit); from ``df`` they replay only a column-
-            # pruned scan, and dropping the distinct removes one
-            # exchange from every consumer. (An explicit persist of the
-            # deduped batch was also tried: the cache write + static-
-            # partition cache reads cost MORE than the recomputation at
-            # every probed size — 1.05-1.35x slower, reverted.)
-            keys = df.select(self.key)
-            candidates = self._prune_by_keys(entries, keys)
-            if candidates:
-                existing = self._with_file(candidates)
-                affected = self._affected_files(existing, keys)
-                if affected:
-                    survivors = self._read_entries(
-                        self._affected_entries(candidates, affected)
-                    ).join(keys, self.key, "left_anti")
-                    out = survivors.unionByName(batch, allowMissingColumns=True)
-                    removed = self._to_rel(affected)
-        added = self._write_files(out, commit)
+        if tomb_keys is not None:
+            tomb_keys = tomb_keys.distinct()  # tomb ROWS: one per key
+            tomb = tomb_keys.withColumn(META_COL, F.lit(commit)).withColumn(
+                "_deleted", F.lit(True)
+            )
+            if batch is None:
+                out = tomb
+            else:
+                batch = batch.join(tomb_keys, self.key, "left_anti")
+                out = batch.withColumn("_deleted", F.lit(False)).unionByName(
+                    tomb, allowMissingColumns=True
+                )
+        added = self._write_files(out, commit, kind="delta")
+        # manifest schema stays tombstone-free (the MOR read path widens
+        # it, _read_entries)
         self._publish(
-            commit, action, added, removed, out.schema,
-            batch_id=batch_id, sink_id=sink_id,
+            commit, "deltacommit", added, [],
+            batch.schema if batch is not None else None, **publish_kw,
         )
         return commit
 
-    def _with_file(self, entries: list[dict]) -> DataFrame:
-        return self._read_entries(entries, with_file=True)
-
-    def _affected_entries(
-        self, candidates: list[dict], affected: list[str]
-    ) -> list[dict]:
-        """Manifest entries for the affected files. Rewinding to the
-        entry list lets the rewrite READ exactly those files — no
-        ``isin`` literal list bloating the plan at 10⁵ files, no
-        post-scan filter/join, and the scan itself shrinks to the
-        affected set (the cheapest possible plan at any file count)."""
-        rel = set(self._to_rel(affected))
-        return [e for e in candidates if e["path"] in rel]
-
-    def _affected_files(self, existing: DataFrame, keys: DataFrame) -> list[str]:
-        rows = (
-            existing.join(keys, self.key, "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
+    def _touched(self, candidates: list[dict], hit) -> list[dict]:
+        """Manifest entries of the ``candidates`` holding a matching row:
+        ``hit`` is a key frame (semi-join on the key) or a row predicate
+        Column. One provenance-tagged scan, one collect of the distinct
+        files. Returning entries, not paths, lets the rewrite READ
+        exactly those files — no ``isin`` literal list bloating the plan
+        at 10⁵ files, no post-scan filter/join."""
+        if not candidates:
+            return []
+        tagged = self._read_entries(candidates, with_file=True)
+        tagged = (
+            tagged.join(hit, self.key, "left_semi")
+            if isinstance(hit, DataFrame)
+            else tagged.where(hit)
         )
-        return [r["_file"] for r in rows]
+        files = set(
+            self._to_rel(
+                [r["_file"] for r in tagged.select("_file").distinct().collect()]
+            )
+        )
+        return [e for e in candidates if e["path"] in files]
+
+    def _rewrite(
+        self,
+        commit: str,
+        action: str,
+        touched: list[dict],
+        transform,
+        new_rows: DataFrame | None = None,
+        removed: Sequence[str] = (),
+        **publish_kw,
+    ) -> str:
+        """The COW commit tail: ``transform`` the rows of the ``touched``
+        files, union ``new_rows``, write, and publish a manifest that
+        removes the touched files (plus ``removed``, files retired
+        without a read). A commit with nothing to write publishes an
+        empty, schema-less manifest."""
+        out = new_rows
+        if touched:
+            kept = transform(self._read_entries(touched))
+            out = (
+                kept
+                if out is None
+                else kept.unionByName(out, allowMissingColumns=True)
+            )
+        removed = [*(e["path"] for e in touched), *removed]
+        if out is None:
+            self._publish(commit, action, [], removed, None, **publish_kw)
+            return commit
+        added = self._write_files(out, commit)
+        self._publish(commit, action, added, removed, out.schema, **publish_kw)
+        return commit
 
     def _to_rel(self, abs_paths: list[str]) -> list[str]:
         base = self.path.rstrip("/") + "/"
@@ -4116,7 +4050,7 @@ class Table:
         The range prune costs one Spark job (``keys.agg(min,max)``), so it
         only runs when the live set is big enough for pruning to beat the
         job it spends: below :data:`PRUNE_MIN_FILES` files, the downstream
-        affected-files semi-join scans a key-column-pruned handful of
+        touched-files semi-join scans a key-column-pruned handful of
         footers anyway, and the agg job is pure per-commit overhead (r6
         A/B at sf0.1: merge commit 1.07 s → 0.81 s with the gate). At the
         10⁵-file scale the prune exists for, the gate never triggers."""
