@@ -242,7 +242,7 @@ def _pred_hits_expression_index(pred: str, t: Table) -> bool:
     table's registered expression indexes — the signal that a fragment
     with no column-stats filters is still worth routing through
     :meth:`Table.read_where`."""
-    metas = t._expression_indexes()
+    metas = t._file_indexes("expression")
     if not metas:
         return False
     exprs = {_norm_expr_text(m["expr"]) for m in metas}
@@ -571,7 +571,7 @@ def _auto_where(
         only = next(iter(all_rels.values()))
         exprs = {
             _norm_expr_text(m["expr"])
-            for m in tables[only]._expression_indexes()
+            for m in tables[only]._file_indexes("expression")
         }
         if exprs:
             for conj in split_top(pred, r"\bAND\b"):

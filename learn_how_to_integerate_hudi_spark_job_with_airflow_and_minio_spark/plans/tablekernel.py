@@ -2750,8 +2750,6 @@ def table_sql_optimize_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "commit and that the prune dropped files",
 )
 def table_auto_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..storage import read_json
-
     orders = load_tables(spark, sf_dir, "orders")["orders"].select(*_COLS)
     path = tempfile.mkdtemp(prefix="engine_autoidx_")
     t = Table.create(
@@ -2765,8 +2763,7 @@ def table_auto_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved KEY layout: hash-repartition → every file's key range
     # covers ~the whole domain, so only exact containment prunes
     t.bulk_insert(orders.repartition(8, "o_orderkey"))
-    _, meta_path = t._record_index_paths()
-    covered = set(read_json(meta_path)["files"])
+    covered = set(t._index_meta("record")["files"])
     assert covered == {e["path"] for e in t.current_files()}
     low4 = [
         r[0]
@@ -2787,7 +2784,7 @@ def table_auto_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = t._prune_by_keys(entries, keys)
     assert len(pruned) < len(entries), (len(pruned), len(entries))
     t.upsert(batch)
-    covered2 = set(read_json(meta_path)["files"])
+    covered2 = set(t._index_meta("record")["files"])
     # every LIVE file is covered (the commit's new files were indexed
     # in-commit); rewritten files' old paths stay in the covered set as
     # inert dead mappings — the index contract, so superset not equality

@@ -518,22 +518,21 @@ def execute_ddl(
         re.IGNORECASE,
     )
     if m:
-        # metadata-plane removal: reads consult an index only when its
-        # meta file exists, so deleting the directory is the whole op.
-        # Accepts an expression-index NAME, a secondary-indexed COLUMN
-        # name, or the literal ``record_index``; resolution order is
-        # record → expression → secondary (CREATE enforces canonical
-        # names for record/secondary, so a clash means the user named
-        # an expression index after an indexed column — the expression
+        # metadata-plane removal (TableServices._drop_index). Accepts an
+        # expression-index NAME, a secondary-indexed COLUMN name, or the
+        # literal ``record_index``; resolution order is record →
+        # expression → secondary (CREATE enforces canonical names for
+        # record/secondary, so a clash means the user named an
+        # expression index after an indexed column — the expression
         # index wins and a second DROP removes the secondary one).
+        from .table import TableServices
+
         name = m.group(1).strip("`")
         t = _lookup(catalog, m.group(2))
         if name.lower() == "bloom_index" and t.meta.get("index_type") == "bloom":
             # table not bloom-flagged → fall through to the generic
             # resolution below (CREATE reserves this name for the bloom
             # kind, but a pre-reservation expression index could exist)
-            from .table import TableServices
-
             TableServices(t).drop_bloom_index()
             return None
         if (
@@ -544,17 +543,13 @@ def execute_ddl(
                 "the bucket index is a creation-time structural mode — "
                 "it cannot be dropped; recreate the table without it"
             )
-        candidates = [
-            t._expression_index_paths(name),
-            t._secondary_index_paths(name),
-        ]
+        wanted = [("expression", name), ("secondary", name)]
         if name.lower() == "record_index":
-            candidates.insert(0, t._record_index_paths())
-        for idx_dir, meta_path in candidates:
-            if t.fs.exists(meta_path):
-                for p in sorted(t.fs.list(idx_dir), reverse=True):
-                    t.fs.delete(p)
-                t.fs.delete(meta_path)
+            wanted.insert(0, ("record", "record_index"))
+        published = {(i["kind"], i["name"]) for i in t._file_indexes()}
+        for target in wanted:
+            if target in published:
+                TableServices(t)._drop_index(*target)
                 return None
         raise ValueError(f"no index {name!r} on table {m.group(2)!r}")
     m = re.match(
@@ -747,17 +742,12 @@ def execute_ddl(
                     f"{t.key} % {t.meta.get('bucket_count')}",
                 )
             )
-        if t.fs.exists(t._record_index_paths()[1]):
-            rows.append(("record_index", "record", t.key))
-        for e in t._expression_indexes():
-            rows.append((e["name"], "expression", e["expr"]))
-        base = posixpath.join(t.path, "_index")
-        if t.fs.exists(base):
-            for p in t.fs.list(base):
-                fn = posixpath.basename(p)
-                sm = re.fullmatch(r"secondary_(.+)_meta\.json", fn)
-                if sm:
-                    rows.append((sm.group(1), "secondary", sm.group(1)))
+        for i in t._file_indexes():
+            target = {
+                "record": t.key, "expression": i.get("expr"),
+                "secondary": i["name"],
+            }[i["kind"]]
+            rows.append((i["name"], i["kind"], target))
         return spark.createDataFrame(
             sorted(rows), "index_name string, index_type string, target string"
         )

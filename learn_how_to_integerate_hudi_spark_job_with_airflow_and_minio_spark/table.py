@@ -47,7 +47,7 @@ import os
 import posixpath
 import re
 from datetime import datetime, timezone
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,6 +87,47 @@ def _utcnow() -> str:
 
 _AUTO_IDX_RX = re.compile(r"^secondary_index\(([A-Za-z_][\w$]*)\)$")
 
+# -- parquet file indexes: the one layout and naming scheme -------------
+#
+# Record, secondary and expression indexes share one contract (Hudi 1.0
+# keeps them as partitions of one metadata table): ``_index/<dir>/`` holds
+# ``(_f, ...)`` parquet rows, and ``_index/<dir>_meta.json`` names the
+# exact set of data files they cover. The meta is the publish point: it
+# is written after the payload and removed before it, so a reader sees a
+# complete index or none. Data files are immutable, so a covered file is
+# indexed exactly forever; a file outside the covered set is always kept.
+# ``(kind, name)`` ↔ ``<dir>``: the record index has one canonical name.
+_INDEX_PREFIX = {"secondary": "secondary_", "expression": "expr_"}
+
+
+def _index_dir_name(kind: str, name: str) -> str:
+    return "record_index" if kind == "record" else _INDEX_PREFIX[kind] + name
+
+
+def _index_of_dir_name(seg: str) -> tuple[str, str] | None:
+    """``(kind, name)`` of an ``_index/`` payload dir name, or None for
+    the families kept elsewhere (bloom sidecars)."""
+    if seg == "record_index":
+        return ("record", "record_index")
+    for kind, prefix in _INDEX_PREFIX.items():
+        if seg.startswith(prefix) and len(seg) > len(prefix):
+            return (kind, seg[len(prefix):])
+    return None
+
+
+def _auto_index_target(spec: str) -> tuple[str, str] | None:
+    """The ``(kind, name)`` index an ``auto_index`` spec maintains, or
+    None when the spec is not ``record_index`` / ``secondary_index(c)``."""
+    s = str(spec).strip()
+    if s == "record_index":
+        return ("record", "record_index")
+    m = _AUTO_IDX_RX.match(s)
+    return ("secondary", m.group(1)) if m else None
+
+
+def _auto_index_spec(kind: str, name: str) -> str:
+    return "record_index" if kind == "record" else f"secondary_index({name})"
+
 
 def _validate_auto_index(
     specs: list[str], key: str, columns: set[str] | None = None
@@ -100,27 +141,24 @@ def _validate_auto_index(
     AFTER its commit durably published (review finding)."""
     out = []
     for raw in specs:
-        s = str(raw).strip()
-        if s == "record_index":
-            out.append(s)
-            continue
-        m = _AUTO_IDX_RX.match(s)
-        if not m:
+        target = _auto_index_target(raw)
+        if target is None:
             raise ValueError(
                 f"auto_index spec {raw!r} is not 'record_index' or "
                 "'secondary_index(<col>)'"
             )
-        if m.group(1) == key:
+        kind, col = target
+        if kind == "secondary" and col == key:
             raise ValueError(
                 f"secondary_index({key}) duplicates the record key — "
                 "use 'record_index'"
             )
-        if columns is not None and m.group(1) not in columns:
+        if kind == "secondary" and columns is not None and col not in columns:
             raise ValueError(
                 f"auto_index spec {raw!r} names a column not in the "
                 "table schema"
             )
-        out.append(s)
+        out.append(_auto_index_spec(kind, col))
     if len(set(out)) != len(out):
         raise ValueError(f"duplicate auto_index spec in {specs!r}")
     return out
@@ -3440,12 +3478,15 @@ class Table:
         # crash between the two leaves an orphaned old-name payload,
         # which every pruner treats as absent (no pruning, never wrong
         # pruning — the index staleness contract).
-        migrations: list = []
-        if self.fs.exists(self._secondary_index_paths(old)[1]):
-            migrations.append(("secondary", old))
+        indexes = self._file_indexes()
+        move_secondary = any(
+            i["kind"] == "secondary" and i["name"] == old for i in indexes
+        )
         word = re.compile(rf"\b{re.escape(old)}\b")
         expr_rewrites: dict[str, str] = {}
-        for e in self._expression_indexes():
+        for e in indexes:
+            if e["kind"] != "expression":
+                continue
             expr = e.get("expr") or ""
             try:
                 # quote-aware rewrite (r14, lifting the r13 literal
@@ -3465,18 +3506,6 @@ class Table:
                 )
             if new_expr != expr:
                 expr_rewrites[e["name"]] = new_expr
-                migrations.append(("expression", e["name"]))
-        for spec in list(self.meta.get("auto_index") or []):
-            # parse the spec like the maintenance loop does — a raw
-            # substring test would spuriously match unrelated columns
-            # whose name happens to appear inside the spec text
-            spec_col = (
-                self.key
-                if spec == "record_index"
-                else str(spec)[len("secondary_index("):-1].strip()
-            )
-            if spec_col == old:
-                migrations.append(("auto_index", spec))
         for cname, cexpr in (self.meta.get("constraints") or {}).items():
             if word.search(str(cexpr)):
                 raise ValueError(
@@ -3527,38 +3556,36 @@ class Table:
             commit, "alter_rename_column", [], [], new_schema,
             field_ids=new_ids,
         )
-        if any(kind == "auto_index" for kind, _ in migrations):
+        specs = self.meta.get("auto_index") or []
+        old_spec = _auto_index_spec("secondary", old)
+        if old_spec in specs:
             self.meta["auto_index"] = [
-                f"secondary_index({new})"
-                if spec != "record_index"
-                and str(spec)[len("secondary_index("):-1].strip() == old
-                else spec
-                for spec in self.meta["auto_index"]
+                _auto_index_spec("secondary", new) if s == old_spec else s
+                for s in specs
             ]
             write_json(
                 posixpath.join(self.path, "_table.json"), self.meta
             )
-        for kind, ref in migrations:
-            if kind == "secondary":
-                odir, ometa = self._secondary_index_paths(old)
-                ndir, nmeta = self._secondary_index_paths(new)
-                # directory-emptiness probe via list with a trailing
-                # '/', NOT exists(): S3 exists() is head_object and a
-                # prefix is not an object, so an exists() gate would
-                # skip the payload move while the meta migrated —
-                # crashed reads now, silently wrong pruning after the
-                # next incremental build (r13 review finding)
-                if self.fs.list(odir.rstrip("/") + "/"):
-                    self.fs.move(odir, ndir)
-                m = read_json(ometa)
-                m["column"] = new
-                write_json(nmeta, m)
-                self.fs.delete(ometa)
-            elif kind == "expression":
-                _, mpath = self._expression_index_paths(ref)
-                m = read_json(mpath)
-                m["expr"] = expr_rewrites[ref]
-                write_json(mpath, m)
+        if move_secondary:
+            odir, ometa = self._index_paths("secondary", old)
+            ndir, nmeta = self._index_paths("secondary", new)
+            # unpublish, move, publish under the new name: a crash in
+            # between leaves a meta-less payload (no index)
+            m = read_json(ometa)
+            self.fs.delete(ometa)
+            # directory-emptiness probe via list with a trailing '/',
+            # NOT exists(): S3 exists() is head_object and a prefix is
+            # not an object, so an exists() gate would skip the payload
+            # move while the meta migrated (r13 review finding)
+            if self.fs.list(odir.rstrip("/") + "/"):
+                self.fs.move(odir, ndir)
+            m["column"] = new
+            write_json(nmeta, m)
+        for name, new_expr in expr_rewrites.items():
+            mpath = self._index_paths("expression", name)[1]
+            m = read_json(mpath)
+            m["expr"] = new_expr
+            write_json(mpath, m)
         return commit
 
     def partial_update(self, df: DataFrame) -> str:
@@ -4447,14 +4474,66 @@ class Table:
                 out.append(e)
         return out
 
-    # -- record-level index (Hudi record index analog) -----------------
+    # -- parquet file indexes (record / secondary / expression) --------
+    # One module for the three; the layout and contract are described at
+    # _INDEX_PREFIX. Build, drop and vacuum live on TableServices.
 
-    def _record_index_paths(self) -> tuple[str, str]:
+    def _index_paths(
+        self, kind: str, name: str = "record_index"
+    ) -> tuple[str, str]:
+        """``(payload dir, meta path)`` of the ``(kind, name)`` index."""
+        base = posixpath.join(self.path, "_index", _index_dir_name(kind, name))
+        return base, f"{base}_meta.json"
+
+    def _index_meta(self, kind: str, name: str = "record_index") -> dict | None:
+        """The published meta of one index, or None when it has none."""
+        meta_path = self._index_paths(kind, name)[1]
+        return read_json(meta_path) if self.fs.exists(meta_path) else None
+
+    def _file_indexes(self, kind: str | None = None) -> list[dict]:
+        """Every published record / secondary / expression index (or
+        only those of ``kind``): its meta, plus ``kind`` and ``name``
+        taken from the meta file name. One listing of ``_index/``, no
+        Spark job."""
         base = posixpath.join(self.path, "_index")
-        return (
-            posixpath.join(base, "record_index"),
-            posixpath.join(base, "record_index_meta.json"),
+        out = []
+        for p in self.fs.list(base):
+            rel = p[len(base):].lstrip("/")
+            if "/" in rel or not rel.endswith("_meta.json"):
+                continue
+            target = _index_of_dir_name(rel[: -len("_meta.json")])
+            if target is not None and kind in (None, target[0]):
+                out.append({**read_json(p), "kind": target[0], "name": target[1]})
+        return out
+
+    def _index_prune(
+        self,
+        entries: list[dict],
+        kind: str,
+        name: str,
+        hits: Callable[[DataFrame], DataFrame | None],
+        meta: dict | None = None,
+    ) -> list[dict]:
+        """The prune tail every parquet index shares: drop each covered
+        file that ``hits`` (the caller's filter over the index payload,
+        or None to prune nothing) does not name in ``_f``. Files outside
+        the covered set are kept; no covered entry means no Spark job."""
+        if meta is None:
+            meta = self._index_meta(kind, name)
+        covered = set(meta["files"]) if meta else set()
+        if not any(e["path"] in covered for e in entries):
+            return entries
+        hit = hits(self.spark.read.parquet(self._index_paths(kind, name)[0]))
+        if hit is None:
+            return entries
+        hit_paths = set(
+            self._to_rel([r["_f"] for r in hit.select("_f").collect()])
         )
+        return [
+            e
+            for e in entries
+            if e["path"] not in covered or e["path"] in hit_paths
+        ]
 
     def _prune_by_record_index(
         self, entries: list[dict], keys: DataFrame
@@ -4463,64 +4542,14 @@ class Table:
         contains NONE of the batch keys. Range stats keep a file whenever
         the batch's [min,max] overlaps it — for a scattered point-update
         batch that is usually EVERY file; the record index reduces it to
-        exactly the files that hold a touched key.
-
-        Staleness-safe by construction: data files are immutable, so a
-        file that was live when the index was built is correctly indexed
-        forever. Files committed after the index build are simply not
-        covered and fall through to the range-stats verdict; rebuilding
-        the index (async table service, like Hudi's indexer) restores
-        exact pruning for them.
-        """
-        idx_dir, meta_path = self._record_index_paths()
-        if not self.fs.exists(meta_path):
-            return entries
-        covered = set(read_json(meta_path)["files"])
-        if not any(e["path"] in covered for e in entries):
-            return entries
-        idx = self.spark.read.parquet(idx_dir)
-        hits = (
-            idx.join(
-                keys.select(F.col(self.key).alias("_bk")),
-                idx["_k"] == F.col("_bk"),
-                "left_semi",
-            )
+        exactly the files that hold a touched key."""
+        bk = keys.select(F.col(self.key).alias("_bk"))
+        return self._index_prune(
+            entries, "record", "record_index",
+            lambda idx: idx.join(bk, idx["_k"] == F.col("_bk"), "left_semi")
             .select("_f")
-            .distinct()
-            .collect()
+            .distinct(),
         )
-        hit_paths = set(self._to_rel([r["_f"] for r in hits]))
-        return [
-            e
-            for e in entries
-            if e["path"] not in covered or e["path"] in hit_paths
-        ]
-
-    def _secondary_index_paths(self, col: str) -> tuple[str, str]:
-        base = posixpath.join(self.path, "_index")
-        return (
-            posixpath.join(base, f"secondary_{col}"),
-            posixpath.join(base, f"secondary_{col}_meta.json"),
-        )
-
-    def _expression_index_paths(self, name: str) -> tuple[str, str]:
-        base = posixpath.join(self.path, "_index")
-        return (
-            posixpath.join(base, f"expr_{name}"),
-            posixpath.join(base, f"expr_{name}_meta.json"),
-        )
-
-    def _expression_indexes(self) -> list[dict]:
-        """Registered expression-index metas (empty when none exist)."""
-        base = posixpath.join(self.path, "_index")
-        if not self.fs.exists(base):
-            return []
-        out = []
-        for p in self.fs.list(base):
-            fn = posixpath.basename(p)
-            if fn.startswith("expr_") and fn.endswith("_meta.json"):
-                out.append(read_json(p))
-        return out
 
     def _prune_by_expression_index(
         self, entries: list[dict], pred: str
@@ -4535,12 +4564,8 @@ class Table:
         Fail-closed everywhere: a top-level OR disables extraction; a
         conjunct whose left side doesn't normalize to a registered
         index expression contributes nothing; literal/stats type-class
-        mismatches skip the conjunct; null envelopes and files outside
-        the index's covered set always pass through to the exact
-        predicate (same staleness contract as the secondary index —
-        immutable data files stay correctly indexed forever, newer
-        uncovered files fall through)."""
-        metas = self._expression_indexes()
+        mismatches skip the conjunct; null envelopes always pass."""
+        metas = self._file_indexes("expression")
         if not metas or _scan_top(pred, r"\bOR\b"):
             return entries
         conjs = []
@@ -4566,21 +4591,8 @@ class Table:
             conjs.append((_norm_expr_text(m.group(1)), m.group(2), lit))
         if not conjs:
             return entries
-        for meta in metas:
-            if not meta.get("files"):
-                # index built while the table had zero live files (e.g.
-                # right after TRUNCATE): the parquet dir was never
-                # written — nothing is covered, nothing to prune
-                continue
-            expr_norm = _norm_expr_text(meta["expr"])
-            matched = [(op, lit) for lhs, op, lit in conjs if lhs == expr_norm]
-            if not matched:
-                continue
-            # one read + one collect per index, however many conjuncts
-            # reference it: the conditions AND together (all are
-            # required conjuncts of the same predicate)
-            idx_dir, _ = self._expression_index_paths(meta["name"])
-            idx = self.spark.read.parquet(idx_dir)
+
+        def envelope(idx: DataFrame, matched) -> DataFrame | None:
             mdt = dict(idx.dtypes).get("_min", "")
             num = ("tinyint", "smallint", "int", "bigint", "float",
                    "double", "decimal")
@@ -4608,16 +4620,18 @@ class Table:
                     c = F.col("_max") >= v
                 c = F.coalesce(c, F.lit(True))  # null envelope → keep
                 cond = c if cond is None else (cond & c)
-            if cond is None:
-                continue
-            hits = idx.where(cond).select("_f").collect()
-            hit_paths = set(self._to_rel([r["_f"] for r in hits]))
-            covered = set(meta["files"])
-            entries = [
-                e
-                for e in entries
-                if e["path"] not in covered or e["path"] in hit_paths
-            ]
+            return None if cond is None else idx.where(cond)
+
+        for meta in metas:
+            expr_norm = _norm_expr_text(meta["expr"])
+            matched = [(op, lit) for lhs, op, lit in conjs if lhs == expr_norm]
+            if matched:
+                # one read + one collect per index, however many
+                # conjuncts reference it: they are ANDed
+                entries = self._index_prune(
+                    entries, "expression", meta["name"],
+                    lambda idx, m=matched: envelope(idx, m), meta,
+                )
         return entries
 
     def _prune_by_secondary_index(
@@ -4628,29 +4642,13 @@ class Table:
         file whose per-file distinct-value set lacks ``value``. Range
         stats are useless for a column uncorrelated with the file layout
         (a random status column spans its whole domain in every
-        key-sorted file); the value→files map prunes exactly. Same
-        staleness contract as the record index: immutable data files stay
-        correctly indexed forever, uncovered (newer) files fall through
-        to the stats verdict."""
-        idx_dir, meta_path = self._secondary_index_paths(col)
-        if not self.fs.exists(meta_path):
-            return entries
-        covered = set(read_json(meta_path)["files"])
-        if not any(e["path"] in covered for e in entries):
-            return entries
-        idx = self.spark.read.parquet(idx_dir)
-        hits = (
-            idx.where(F.col("_v").eqNullSafe(F.lit(value)))
+        key-sorted file); the value→files map prunes exactly."""
+        return self._index_prune(
+            entries, "secondary", col,
+            lambda idx: idx.where(F.col("_v").eqNullSafe(F.lit(value)))
             .select("_f")
-            .distinct()
-            .collect()
+            .distinct(),
         )
-        hit_paths = set(self._to_rel([r["_f"] for r in hits]))
-        return [
-            e
-            for e in entries
-            if e["path"] not in covered or e["path"] in hit_paths
-        ]
 
     def _write_files(self, df: DataFrame, commit: str, kind: str = "base") -> list[dict]:
         # the write dir carries a per-ATTEMPT token: two writers racing
@@ -5060,20 +5058,22 @@ class Table:
         names = set(schema.fieldNames()) if schema is not None else set()
         maintained: list[str] = []
         for spec in self.meta.get("auto_index") or []:
+            target = _auto_index_target(spec)
+            if target is None or (
+                target[0] == "secondary" and names and target[1] not in names
+            ):
+                # spec names a column the current schema lacks — the
+                # crash window between a rename's publish and its spec
+                # rewrite (or a manual meta edit). Index extension
+                # simply skips: the covered subset stays valid
+                # (staleness contract), the WRITE must not fail for it
+                continue
+            kind, name = target
             try:
-                if spec == "record_index":
+                if kind == "record":
                     svc.build_record_index(incremental=True)
                 else:
-                    col = spec[len("secondary_index("):-1]
-                    if names and col not in names:
-                        # spec names a column the current schema lacks
-                        # — the crash window between a rename's publish
-                        # and its spec rewrite (or a manual meta edit).
-                        # Index extension simply skips: the covered
-                        # subset stays valid (staleness contract), the
-                        # WRITE must not fail for it
-                        continue
-                    svc.build_secondary_index(col, incremental=True)
+                    svc.build_secondary_index(name, incremental=True)
                 maintained.append(spec)
             except Exception as exc:
                 # the manifest is already durable: make it unambiguous
@@ -5554,168 +5554,135 @@ class TableServices:
                 t.fs.delete(p)
         t._bloom_sidecars.clear()
 
-    def build_record_index(self, incremental: bool = False) -> str:
-        """Build or extend the record-level index: a distributed scan of
-        (not-yet-indexed) live files emitting ``(key, file)`` rows,
-        written hash-partitioned on the key (Hudi record-index analog,
-        built async like Hudi's metadata indexer — the write path is
-        never slowed down).
-
-        ``incremental=True`` scans ONLY files that joined the live set
-        since the last build and APPENDS them to the index — the steady-
-        state maintenance mode: each run costs O(new data), not O(table).
-        Retired files need no cleanup pass: pruning intersects index
-        hits with the current live set, so dead mappings are inert (and
-        a full rebuild drops them).
-
-        Point-update pruning this enables: a scattered batch whose
-        [min,max] key range spans the table keeps EVERY file under range
-        stats, but touches only |batch| files under exact containment —
-        at 10⁵ files that is the difference between rewriting the table
-        and rewriting a handful of files. Correct under staleness
-        because data files are immutable: a file live at build time is
-        indexed exactly, forever; newer files fall back to range stats
-        until the next build (see ``_prune_by_record_index``).
-
-        Returns the commit the index is exact as of.
-        """
+    def _build_index(
+        self,
+        kind: str,
+        name: str,
+        incremental: bool,
+        payload: Callable[[DataFrame], DataFrame],
+        fields: dict,
+    ) -> str:
+        """Build or extend one parquet file index (contract at
+        ``_INDEX_PREFIX``): one distributed scan of the live files —
+        with ``incremental=True`` only those the published meta does not
+        cover yet, appended — projected by ``payload`` to ``(_f, ...)``
+        rows. A full build unpublishes an existing meta before it
+        overwrites the payload; the new meta (``fields`` + the covered
+        set) is written last. Returns the commit the index is exact as
+        of."""
         t = self.t
         as_of = t.latest_commit()
         if as_of is None:
             raise ValueError("cannot index an empty table")
-        idx_dir, meta_path = t._record_index_paths()
+        idx_dir, meta_path = t._index_paths(kind, name)
         entries = t.current_files()
+        old = t._index_meta(kind, name)
         prev: list[str] = []
-        if incremental and t.fs.exists(meta_path):
-            prev = read_json(meta_path)["files"]
+        if incremental and old is not None:
+            prev = old["files"]
             entries = [e for e in entries if e["path"] not in set(prev)]
+        elif old is not None:
+            t.fs.delete(meta_path)
         if entries:
-            df = t._read_entries(entries, with_file=True)
-            n = max(1, int(t.spark.conf.get("spark.sql.shuffle.partitions")))
-            (
-                df.select(F.col(t.key).alias("_k"), F.col("_file").alias("_f"))
-                .repartition(n, "_k")
-                .write.mode("append" if prev else "overwrite")
-                .parquet(idx_dir)
-            )
-        # meta LAST, carrying the exact covered file set: a crash
-        # mid-build leaves the old meta pointing at a subset of what the
-        # index now holds — extra mappings are inert until re-covered
+            payload(t._read_entries(entries, with_file=True)).write.mode(
+                "append" if prev else "overwrite"
+            ).parquet(idx_dir)
         write_json(
             meta_path,
             {
                 "as_of": as_of,
-                "key": t.key,
+                **fields,
                 "files": sorted({*prev, *(e["path"] for e in entries)}),
             },
         )
         return as_of
+
+    def build_record_index(self, incremental: bool = False) -> str:
+        """Build or extend the record-level index: ``(key, file)`` rows,
+        hash-partitioned on the key (Hudi record-index analog, built
+        async like Hudi's metadata indexer — the write path is never
+        slowed down). A scattered point-update batch whose [min,max]
+        spans the table keeps every file under range stats but touches
+        only the files that hold its keys under this index
+        (``Table._prune_by_record_index``). ``incremental=True`` scans
+        only files added since the last build: O(new data)."""
+        t = self.t
+        n = max(1, int(t.spark.conf.get("spark.sql.shuffle.partitions")))
+        return self._build_index(
+            "record", "record_index", incremental,
+            lambda df: df.select(
+                F.col(t.key).alias("_k"), F.col("_file").alias("_f")
+            ).repartition(n, "_k"),
+            {"key": t.key},
+        )
 
     def build_secondary_index(self, col: str, incremental: bool = False) -> str:
-        """Build or extend a secondary index on a NON-key column: a
-        distributed scan of (not-yet-indexed) live files emitting the
-        per-file DISTINCT ``(value, file)`` pairs, written hash-
-        partitioned on the value (Hudi 1.0 secondary-index analog,
-        async like the record indexer). Index size is Σ per-file
-        distinct values — for a low-cardinality column that is
-        O(files·|domain|), a fraction of the record index.
-
-        Enables exact equality pruning where range stats are blind: a
-        status/category column uncorrelated with the file layout spans
-        its whole domain in every file's [min,max], so stats keep
-        everything; the value→files map keeps only true containers
-        (``Table._prune_by_secondary_index``). Same incremental/
-        staleness contract as :meth:`build_record_index`.
-
-        Returns the commit the index is exact as of.
-        """
+        """Build or extend a secondary index on a NON-key column: the
+        per-file DISTINCT ``(value, file)`` pairs, hash-partitioned on
+        the value (Hudi 1.0 secondary-index analog). Its size is Σ
+        per-file distinct values; where a column uncorrelated with the
+        file layout spans its whole domain in every file's [min,max],
+        the value→files map keeps only true containers
+        (``Table._prune_by_secondary_index``)."""
         t = self.t
-        as_of = t.latest_commit()
-        if as_of is None:
-            raise ValueError("cannot index an empty table")
-        idx_dir, meta_path = t._secondary_index_paths(col)
-        entries = t.current_files()
-        prev: list[str] = []
-        if incremental and t.fs.exists(meta_path):
-            prev = read_json(meta_path)["files"]
-            entries = [e for e in entries if e["path"] not in set(prev)]
-        if entries:
-            df = t._read_entries(entries, with_file=True)
-            n = max(1, int(t.spark.conf.get("spark.sql.shuffle.partitions")))
-            (
-                df.select(F.col(col).alias("_v"), F.col("_file").alias("_f"))
-                .distinct()
-                .repartition(n, "_v")
-                .write.mode("append" if prev else "overwrite")
-                .parquet(idx_dir)
-            )
-        write_json(
-            meta_path,
-            {
-                "as_of": as_of,
-                "column": col,
-                "files": sorted({*prev, *(e["path"] for e in entries)}),
-            },
+        n = max(1, int(t.spark.conf.get("spark.sql.shuffle.partitions")))
+        return self._build_index(
+            "secondary", col, incremental,
+            lambda df: df.select(
+                F.col(col).alias("_v"), F.col("_file").alias("_f")
+            ).distinct().repartition(n, "_v"),
+            {"column": col},
         )
-        return as_of
 
     def build_expression_index(
         self, expr: str, name: str | None = None, incremental: bool = False
     ) -> str:
         """Build or extend an EXPRESSION index (Hudi 1.0 expression/
-        functional index analog): one distributed scan of the
-        (not-yet-indexed) live files emitting each file's min/max of an
+        functional index analog): each file's ``(_f, _min, _max)`` of an
         arbitrary Spark-SQL expression — ``month(o_orderdate)``,
-        ``lower(city)`` — written as a tiny ``(_f, _min, _max)``
-        parquet. Where the manifest's per-COLUMN stats are blind (a
-        function of a column has no stats), the envelope lets
+        ``lower(city)``. Where the manifest's per-COLUMN stats are blind
+        (a function of a column has no stats), the envelope lets
         :meth:`Table.read_where` drop files whose expression range
-        cannot satisfy a ``<expr> <op> <literal>`` conjunct — pruning
-        before planning, O(files) index size.
-
-        Same async/staleness contract as the record and secondary
-        indexes: data files are immutable so indexed files stay exact
-        forever; files written after the build fall through unpruned
-        until an ``incremental=True`` extension covers them. Returns
-        the commit the index is exact as of."""
-        t = self.t
-        as_of = t.latest_commit()
-        if as_of is None:
-            raise ValueError("cannot index an empty table")
+        cannot satisfy a ``<expr> <op> <literal>`` conjunct. ``name``
+        defaults to the expression folded to an identifier; extending
+        an index under another expression is refused."""
         if name is None:
             name = re.sub(r"\W+", "_", expr).strip("_").lower()
-        idx_dir, meta_path = t._expression_index_paths(name)
-        entries = t.current_files()
-        prev: list[str] = []
-        if incremental and t.fs.exists(meta_path):
-            old = read_json(meta_path)
-            if _norm_expr_text(old["expr"]) != _norm_expr_text(expr):
-                raise ValueError(
-                    f"expression index {name!r} already exists for "
-                    f"{old['expr']!r}; refusing to extend it with "
-                    f"{expr!r}"
-                )
-            prev = old["files"]
-            entries = [e for e in entries if e["path"] not in set(prev)]
-        if entries:
-            df = t._read_entries(entries, with_file=True)
-            e = F.expr(expr)
-            (
-                df.groupBy(F.col("_file").alias("_f"))
-                .agg(F.min(e).alias("_min"), F.max(e).alias("_max"))
-                .write.mode("append" if prev else "overwrite")
-                .parquet(idx_dir)
+        old = self.t._index_meta("expression", name)
+        if (
+            incremental
+            and old is not None
+            and _norm_expr_text(old["expr"]) != _norm_expr_text(expr)
+        ):
+            raise ValueError(
+                f"expression index {name!r} already exists for "
+                f"{old['expr']!r}; refusing to extend it with {expr!r}"
             )
-        write_json(
-            meta_path,
-            {
-                "as_of": as_of,
-                "expr": expr,
-                "name": name,
-                "files": sorted({*prev, *(e["path"] for e in entries)}),
-            },
+        e = F.expr(expr)
+        return self._build_index(
+            "expression", name, incremental,
+            lambda df: df.groupBy(F.col("_file").alias("_f")).agg(
+                F.min(e).alias("_min"), F.max(e).alias("_max")
+            ),
+            {"expr": expr, "name": name},
         )
-        return as_of
+
+    def _drop_index(self, kind: str, name: str) -> None:
+        """Remove one parquet file index and the ``auto_index`` spec that
+        would rebuild it on the next write. The meta goes before the
+        payload: a crash part-way leaves a meta-less payload, which
+        readers treat as no index and :meth:`vacuum_orphan_indexes`
+        reclaims."""
+        t = self.t
+        specs = t.meta.get("auto_index") or []
+        kept = [s for s in specs if _auto_index_target(s) != (kind, name)]
+        if kept != specs:
+            self.set_auto_index(kept)
+        idx_dir, meta_path = t._index_paths(kind, name)
+        t.fs.delete(meta_path)
+        for p in sorted(t.fs.list(idx_dir), reverse=True):
+            t.fs.delete(p)
+        t.fs.rmdir(idx_dir)
 
     def vacuum_orphans(self, older_than_seconds: float = 86400.0) -> list[str]:
         """Delete data files NO manifest has ever referenced — the
@@ -5766,47 +5733,30 @@ class TableServices:
     def vacuum_orphan_indexes(
         self, older_than_seconds: float = 86400.0
     ) -> list[str]:
-        """Sweep half-migrated / dangling index sidecars under
-        ``_index/`` — the explicit recovery path for a crash inside
-        RENAME COLUMN's payload migration (r13 verdict: the recovery
-        story was documentation-only).
+        """Sweep dangling record / secondary / expression index files
+        under ``_index/`` — what a crash inside DROP INDEX, a full
+        rebuild or RENAME COLUMN's payload migration leaves behind
+        (``storage.move`` is copy+delete per object on S3). Reads stay
+        correct throughout: a pruner that finds no meta prunes nothing.
+        The sweep reclaims the bytes:
 
-        ``storage.move`` is copy+delete per object on S3, so a crash
-        mid-migration can leave a payload split across the old and new
-        dirs, a payload with no meta json, or a meta naming a column
-        the schema no longer has. Reads stay CORRECT throughout — a
-        pruner that finds no (or a stale) meta degrades to no-pruning,
-        never wrong pruning (the index staleness contract) — this sweep
-        reclaims the bytes and makes the degraded state visible:
+        - a payload with no published meta (a crashed drop, move or
+          build — that payload is not visible to pruners);
+        - ``secondary_<col>`` payloads and metas whose column is not in
+          the current schema (recovery is a rebuild under the new name).
 
-        - ``secondary_<col>`` payloads AND metas whose column is not in
-          the current schema are deleted (the rename's publish is the
-          source of truth; recovery is a rebuild under the new name);
-        - ``secondary_*`` / ``expr_*`` payload files with NO meta json
-          are deleted (a crashed move's partial copy — that index never
-          became visible to pruners);
-        - everything else under ``_index/`` is UNTOUCHED: the sweep is
-          scoped to the two name-keyed families the rename migration
-          moves. Bloom/record/bucket sidecars live in meta-less dirs by
-          design (``_index/bloom/<token>.json``) and are never
-          migration debris (r14 review finding — the first cut's
-          generic no-meta rule would have destroyed a healthy bloom
-          index). Expression metas are also left alone when only their
-          payload is missing (the meta alone is harmless and an
-          incremental build can re-extend it); a stale expr meta still
-          naming a pre-rename identifier simply never matches.
+        Everything else under ``_index/`` is untouched: bloom sidecars
+        (``_index/bloom/<token>.json``) are meta-less by design, and an
+        expression meta whose payload is missing is harmless (an
+        incremental build re-extends it).
 
         The age guard is the same correctness boundary as
         :meth:`vacuum_orphans`: an in-flight build/migration has payload
         files on disk before its meta publishes, so only files older
         than ``older_than_seconds`` (default 24 h) are eligible. Ages
-        come from ``fs.mtime`` (LastModified on S3 — an os-level stat
-        would return None for every s3a:// object and silently no-op
-        the sweep on exactly the store whose non-atomic move motivates
-        it, r14 review finding); files without a readable mtime are
-        skipped, never deleted. Returns deleted paths; rebuild swept
-        indexes with :meth:`build_secondary_index` /
-        :meth:`build_expression_index`.
+        come from ``fs.mtime`` (LastModified on S3); files without a
+        readable mtime are skipped, never deleted. Returns deleted
+        paths.
         """
         import time as _time
 
@@ -5831,25 +5781,19 @@ class TableServices:
         for p in files:
             rel = p[len(base):].lstrip("/")
             seg = rel.split("/")[0]
-            if not seg.startswith(("secondary_", "expr_")):
-                continue  # bloom/record/bucket families: never debris
-            if seg.endswith("_meta.json"):
-                # dead secondary meta: its column left the schema
-                if seg.startswith("secondary_") and cols:
-                    col = seg[len("secondary_"):-len("_meta.json")]
-                    if col not in cols:
-                        _rm(p)
-                continue
-            if seg.startswith("secondary_") and cols:
-                col = seg[len("secondary_"):]
-                if col not in cols:
-                    _rm(p)  # payload of a renamed-away column
-                    swept_dirs.add(posixpath.join(base, seg))
-                    continue
-            # payload with no published meta: a crashed move's partial
-            # copy (new-name dir before the meta write) or a build that
-            # never finished
-            if f"{seg}_meta.json" not in names:
+            is_meta = "/" not in rel and seg.endswith("_meta.json")
+            target = _index_of_dir_name(
+                seg[: -len("_meta.json")] if is_meta else seg
+            )
+            if target is None:
+                continue  # bloom sidecars: never debris
+            dead_col = target[0] == "secondary" and cols and (
+                target[1] not in cols
+            )
+            if is_meta:
+                if dead_col:
+                    _rm(p)
+            elif dead_col or f"{seg}_meta.json" not in names:
                 _rm(p)
                 swept_dirs.add(posixpath.join(base, seg))
         for d in sorted(swept_dirs):

@@ -178,8 +178,8 @@ def test_rename_migrates_secondary_index(spark, tpath):
         read_json,
     )
 
-    assert not t.fs.exists(t._secondary_index_paths("tag")[1])
-    ndir, nmeta = t._secondary_index_paths("label")
+    assert not t.fs.exists(t._index_paths("secondary", "tag")[1])
+    ndir, nmeta = t._index_paths("secondary", "label")
     assert read_json(nmeta)["column"] == "label"
     # pruning under the NEW name is exact: only the 'a'-containing
     # file survives the index prune
@@ -212,7 +212,7 @@ def test_rename_migrates_expression_index(spark, tpath):
     t.bulk_insert(df_of(spark, [(1, 1, 10.0, "a"), (2, 1, 20.0, "b")]))
     TableServices(t).build_expression_index("upper(tag)", name="utag")
     t.alter_rename_column("tag", "label")
-    metas = t._expression_indexes()
+    metas = t._file_indexes("expression")
     assert [m["expr"] for m in metas] == ["upper(label)"]
     pruned = t._prune_by_expression_index(
         t.current_files(), "upper(label) = 'A'"
@@ -224,7 +224,7 @@ def test_rename_migrates_expression_index(spark, tpath):
         "concat(label, 'label')", name="lit"
     )
     t.alter_rename_column("label", "tag2")
-    metas = {m["name"]: m["expr"] for m in t._expression_indexes()}
+    metas = {m["name"]: m["expr"] for m in t._file_indexes("expression")}
     assert metas["lit"] == "concat(tag2, 'label')"
     assert metas["utag"] == "upper(tag2)"
     pruned = t._prune_by_expression_index(
@@ -809,7 +809,7 @@ def test_rename_auto_index_spec_migrates_not_substring(spark, tmp_path):
     assert t.meta["auto_index"] == ["secondary_index(tagx)"]
     t.alter_rename_column("tagx", "tagz")
     assert t.meta["auto_index"] == ["secondary_index(tagz)"]
-    assert not t.fs.exists(t._secondary_index_paths("tagx")[1])
+    assert not t.fs.exists(t._index_paths("secondary", "tagx")[1])
     # the synchronous maintenance keeps indexing new commits under the
     # migrated name, and pruning under it is exact
     t.insert(
@@ -1304,14 +1304,14 @@ def test_rename_expression_index_quote_aware_rewrite(spark, tpath):
         "concat(tag, 'amt')", name="litonly"
     )
     t.alter_rename_column("amt", "amount")
-    metas = {m["name"]: m["expr"] for m in t._expression_indexes()}
+    metas = {m["name"]: m["expr"] for m in t._file_indexes("expression")}
     assert metas["litonly"] == "concat(tag, 'amt')"
     t.alter_rename_column("tag", "label")
-    metas = {m["name"]: m["expr"] for m in t._expression_indexes()}
+    metas = {m["name"]: m["expr"] for m in t._file_indexes("expression")}
     assert metas["dq"] == 'concat(label, "tag")'
     assert metas["litonly"] == "concat(label, 'amt')"
     # unterminated literal: genuinely unparseable, fail-closed
-    _, mpath = t._expression_index_paths("dq")
+    _, mpath = t._index_paths("expression", "dq")
     from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.storage import (
         read_json,
         write_json,
@@ -1439,7 +1439,7 @@ def test_vacuum_orphan_indexes_sweeps_half_migrated(spark, tpath):
         os.path.join(base, "secondary_ghost_meta.json")
     )
     # the healthy index survives and still prunes
-    assert t.fs.exists(t._secondary_index_paths("tag")[1])
+    assert t.fs.exists(t._index_paths("secondary", "tag")[1])
     pruned = t._prune_by_secondary_index(t.current_files(), "tag", "a")
     assert len(pruned) <= len(t.current_files())
     assert rows_of(
@@ -1448,11 +1448,10 @@ def test_vacuum_orphan_indexes_sweeps_half_migrated(spark, tpath):
 
 
 def test_vacuum_orphan_indexes_spares_meta_less_families(spark, tpath):
-    """r14 review finding: bloom/record/bucket sidecars live in
-    meta-less dirs BY DESIGN (_index/bloom/<token>.json) — the no-meta
-    sweep rule must be scoped to the secondary_*/expr_* families the
-    rename migration actually moves, or it destroys a healthy bloom
-    index."""
+    """r14 review finding: bloom sidecars live in a meta-less dir BY
+    DESIGN (_index/bloom/<token>.json) — the no-meta sweep rule must be
+    scoped to the record_index/secondary_*/expr_* families, or it
+    destroys a healthy bloom index."""
     import os
 
     t = Table.create(

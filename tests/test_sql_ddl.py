@@ -444,7 +444,7 @@ def test_create_index_statements(spark, tmp_path):
     assert c1 == c2 == c3 == t.latest_commit()
     # the expression index registered under the DECLARED name and prunes
     assert any(
-        m["name"] == "oy" for m in t._expression_indexes()
+        m["name"] == "oy" for m in t._file_indexes("expression")
     )
     pruned = t.read_where("year(o_orderdate) = 1996")
     assert pruned.count() == t.snapshot().where(
@@ -489,11 +489,92 @@ def test_drop_index_statement(spark, tmp_path):
         spark, "CREATE INDEX ky ON di USING expression_index(upper(s))", cat
     )
     assert execute_ddl(spark, "DROP INDEX ky ON di", cat) is None
-    assert t._expression_indexes() == []
+    assert t._file_indexes("expression") == []
     # secondary index drops by its COLUMN name
     assert execute_ddl(spark, "DROP INDEX s ON di", cat) is None
     with _pytest.raises(ValueError, match="no index"):
         execute_ddl(spark, "DROP INDEX nope ON di", cat)
+
+
+def test_drop_index_crash_leaves_no_index(spark, tmp_path, monkeypatch):
+    """DROP INDEX removes the meta before the payload: a crash after the
+    first delete leaves no index, never a meta over a partial payload
+    (which pruned away files holding keys, so an upsert duplicated
+    them). The vacuum then reclaims the meta-less payload."""
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        TableServices,
+    )
+
+    t = Table.create(spark, str(tmp_path / "rt"), key="id", precombine="ver")
+    # hash-partitioned like the index payload: each of the 8 data files
+    # holds the keys of one payload file
+    t.bulk_insert(
+        spark.range(0, 4000).repartition(8, "id")
+        .selectExpr("id", "1L AS ver", "'v' AS s")
+    )
+    assert len(t.current_files()) == 8
+    TableServices(t).build_record_index()
+    cat = {"rt": t}
+    real_delete = t.fs.delete
+    calls = []
+
+    def crash_after_first(path):
+        if calls:
+            raise OSError("crash mid-DROP")
+        calls.append(path)
+        real_delete(path)
+
+    monkeypatch.setattr(t.fs, "delete", crash_after_first)
+    with pytest.raises(OSError, match="crash mid-DROP"):
+        execute_ddl(spark, "DROP INDEX record_index ON rt", cat)
+    monkeypatch.setattr(t.fs, "delete", real_delete)
+    t.upsert(spark.range(0, 4000).selectExpr("id", "2L AS ver", "'u' AS s"))
+    snap = t.snapshot()
+    assert snap.count() == 4000
+    assert snap.select("id").distinct().count() == 4000
+    assert snap.where("s = 'u'").count() == 4000
+    idx_dir = t._index_paths("record")[0]
+    assert t.fs.list(idx_dir)
+    swept = TableServices(t).vacuum_orphan_indexes(older_than_seconds=0)
+    assert swept and all(p.startswith(idx_dir) for p in swept)
+    assert not t.fs.list(idx_dir)
+
+
+def test_drop_index_removes_auto_index_spec(spark, tmp_path):
+    """DROP INDEX also drops the auto_index spec that maintains the
+    index; otherwise the next write rebuilds it from scratch."""
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        Table,
+    )
+
+    t = Table.create(
+        spark, str(tmp_path / "ai"), key="id", precombine="ver",
+        auto_index=["secondary_index(s)", "record_index"],
+    )
+    cat = {"ai": t}
+
+    def upsert(ver):
+        t.upsert(
+            spark.range(0, 20).selectExpr("id", f"{ver}L AS ver", "'v' AS s")
+        )
+
+    def shown():
+        return sorted(
+            tuple(r) for r in execute_ddl(spark, "SHOW INDEXES ai", cat)
+            .collect()
+        )
+
+    upsert(1)
+    assert shown() == [
+        ("record_index", "record", "id"), ("s", "secondary", "s"),
+    ]
+    execute_ddl(spark, "DROP INDEX s ON ai", cat)
+    assert t.meta["auto_index"] == ["record_index"]
+    execute_ddl(spark, "DROP INDEX record_index ON ai", cat)
+    assert not t.meta.get("auto_index")
+    upsert(2)
+    assert shown() == []
+    assert t.snapshot().where("ver = 2").count() == 20
 
 
 def test_expression_index_on_empty_table_state_is_harmless(spark, tmp_path):

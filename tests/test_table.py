@@ -926,6 +926,40 @@ def test_record_index_incremental_maintenance(spark, tpath):
     assert t.snapshot().count() == 50
 
 
+def test_record_index_full_rebuild_crash_leaves_no_index(
+    spark, tpath, monkeypatch
+):
+    """A full rebuild over a published index removes the meta before it
+    overwrites the payload: a crash mid-overwrite leaves no index, never
+    the old meta naming a half-written payload."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = make_table(spark, tpath)
+    t.upsert(df_of(spark, [(k, 1, f"a{k}") for k in range(0, 50, 2)]).coalesce(1))
+    t.upsert(df_of(spark, [(k, 1, f"b{k}") for k in range(1, 50, 2)]).coalesce(1))
+    TableServices(t).build_record_index()
+    idx_dir = t._index_paths("record")[0]
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_mid_overwrite(self, path, *a, **kw):
+        if path != idx_dir:
+            return real_parquet(self, path, *a, **kw)
+        shutil.rmtree(path)
+        raise OSError("crash mid-overwrite")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_mid_overwrite)
+    with pytest.raises(OSError, match="crash mid-overwrite"):
+        TableServices(t).build_record_index()
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert t._index_meta("record") is None
+    t.upsert(df_of(spark, [(k, 2, f"u{k}") for k in range(50)]))
+    got = {r["id"]: r["val"] for r in t.snapshot().collect()}
+    assert got == {k: f"u{k}" for k in range(50)}
+    assert t.snapshot().count() == 50
+
+
 def test_archive_timeline_bounds_active_dir(spark, tpath):
     """Hudi archived-timeline analog: old manifests fold into one
     consolidated archive file; the active _commits/ dir stays bounded
@@ -2114,7 +2148,7 @@ def test_auto_record_index_tracks_every_commit(spark, tpath):
 
     t = make_table(spark, tpath, auto_index=["record_index"])
     t.upsert(df_of(spark, [(k, 1, f"e{k}") for k in range(0, 100, 2)]).coalesce(1))
-    _, meta_path = t._record_index_paths()
+    _, meta_path = t._index_paths("record")
     covered = set(read_json(meta_path)["files"])
     assert covered == {e["path"] for e in t.current_files()}
     # second interleaved commit: coverage extends to the NEW files only
@@ -2143,7 +2177,7 @@ def test_auto_secondary_index_and_set_auto_index(spark, tpath):
     ]
     # first post-enable commit backfills (no prior index meta)
     t.upsert(df_of(spark, [(100, 1, "g9")]).coalesce(1))
-    _, meta_path = t._secondary_index_paths("val")
+    _, meta_path = t._index_paths("secondary", "val")
     assert set(read_json(meta_path)["files"]) == {
         e["path"] for e in t.current_files()
     }
@@ -2177,8 +2211,8 @@ def test_auto_index_via_ddl_and_show_create(spark, tmp_path):
     assert t.meta["auto_index"] == ["record_index", "secondary_index(val)"]
     t.upsert(df_of(spark, [(1, 1, "x"), (2, 1, "y")]))
     for meta_path in (
-        t._record_index_paths()[1],
-        t._secondary_index_paths("val")[1],
+        t._index_paths("record")[1],
+        t._index_paths("secondary", "val")[1],
     ):
         assert set(read_json(meta_path)["files"]) == {
             e["path"] for e in t.current_files()
@@ -2813,6 +2847,17 @@ JOB_BUDGETS = {
     "cow_merge_into_insert_collision": 12,
     "mor_upsert": 2,
     "mor_delete": 2,
+    # file indexes, counted before record, secondary and expression
+    # indexes were folded onto one build/prune module
+    "record_index_build_full": 2,
+    "secondary_index_build_full": 3,
+    "expression_index_build_full": 2,
+    "record_index_upsert": 16,
+    "record_index_build_incremental": 2,
+    "secondary_index_build_incremental": 3,
+    "expression_index_build_incremental": 2,
+    "secondary_index_snapshot": 4,
+    "expression_index_read_where": 3,
 }
 
 
@@ -2846,6 +2891,10 @@ def test_commit_job_budgets(spark, tmp_path):
         spark, str(tmp_path / "mor"), key="id", precombine="ver",
         table_type="mor",
     ))
+    indexed = three_files(Table.create(
+        spark, str(tmp_path / "indexed"), key="id", precombine="ver"
+    ))
+    svc = TableServices(indexed)
     upd = [("update", None, {"val": "s.val"})]
     ins = [("insert", None, None)]
     calls = {
@@ -2882,6 +2931,33 @@ def test_commit_job_budgets(spark, tmp_path):
         "mor_delete": lambda: mor.delete(
             spark.createDataFrame([(7,)], "id long")
         ),
+        "record_index_build_full": lambda: svc.build_record_index(),
+        "secondary_index_build_full": lambda: svc.build_secondary_index(
+            "val"
+        ),
+        "expression_index_build_full": lambda: svc.build_expression_index(
+            "upper(val)", name="uval"
+        ),
+        "record_index_upsert": lambda: indexed.upsert(
+            rows((5, 2, "u"), (100, 1, "n"))
+        ),
+        "record_index_build_incremental": lambda: svc.build_record_index(
+            incremental=True
+        ),
+        "secondary_index_build_incremental": (
+            lambda: svc.build_secondary_index("val", incremental=True)
+        ),
+        "expression_index_build_incremental": (
+            lambda: svc.build_expression_index(
+                "upper(val)", name="uval", incremental=True
+            )
+        ),
+        "secondary_index_snapshot": lambda: indexed.snapshot(
+            filters={"val": "u"}
+        ).collect(),
+        "expression_index_read_where": lambda: indexed.read_where(
+            "upper(val) = 'N'"
+        ).collect(),
     }
     used = {name: _count_jobs(spark, name, fn) for name, fn in calls.items()}
     print("jobs per commit:", used)
@@ -2894,6 +2970,14 @@ def test_commit_job_budgets(spark, tmp_path):
     assert rows_of(mor.snapshot().where("id IN (5, 7)"), "id", "val") == [
         (5, "u")
     ]
+    # each index pruned the read it served down to one of four files
+    live = indexed.current_files()
+    assert len(live) == 4
+    assert len(indexed._prune_by_secondary_index(live, "val", "u")) == 1
+    assert len(indexed._prune_by_expression_index(
+        live, "upper(val) = 'N'"
+    )) == 1
+    assert rows_of(indexed.read_where("upper(val) = 'N'"), "id") == [(100,)]
 
 
 def test_rewrite_family_cow_matches_mor(spark, tmp_path):
