@@ -7,12 +7,11 @@ each data file carries a bloom filter over its record keys, and the
 writer tests incoming batch keys against the filters to shrink the set
 of files that must be read for merge resolution.
 
-Why range stats aren't enough: the kernel's min/max key prune
-(:meth:`Table._prune_by_keys`) drops a file only when the batch's key
-envelope misses the file's [min, max]. On an INTERLEAVED layout — keys
-hash-scattered across files, so every file spans nearly the whole key
-domain — the envelope overlaps everything and the range prune keeps
-every file. A bloom filter answers per-file membership instead of
+Why range stats aren't enough: the kernel's min/max key test
+(:meth:`Table._key_probe`) drops a file only when no batch key falls in
+the file's [min, max]. On an INTERLEAVED layout — keys hash-scattered
+across files, so every file spans nearly the whole key domain — every
+key falls in every range and the range test keeps every file. A bloom filter answers per-file membership instead of
 per-file range, so a small scattered update batch prunes to just the
 files that might actually hold a touched key (bounded false-positive
 rate; false positives only cost an extra file read, never correctness).
@@ -31,9 +30,11 @@ without a sidecar simply fall through unpruned until
 Scale notes (100 TB): filters are built EXECUTOR-side in the same
 distributed pass as footer stats (one key-column read of each freshly
 written file — O(new data, one column), never O(table)); the prune
-broadcasts candidate filters and tests batch keys in a map-only job
-with a tiny distinct-int aggregate (numpy-vectorized double hashing —
-no per-key Python loop on the hot path). Broadcasting caps at
+broadcasts candidate filters inside the keyed write's one key-probe pass
+(:meth:`Table._key_probe`: a map-only job whose tasks return the ids of
+the files their keys hit, no aggregate) and tests keys with
+:func:`might_contain` (numpy-vectorized double hashing — no per-key
+Python loop on the hot path). Broadcasting caps at
 :data:`BLOOM_BROADCAST_CAP` total filter bytes (~50k files at default
 sizing); past that the prune declines and the record-level index — the
 engine's exact, shuffle-joined lookup structure — is the right tool,
@@ -125,21 +126,17 @@ def hash_pairs_array(values: list) -> tuple[np.ndarray, np.ndarray]:
     return h1, h2
 
 
-def files_hit(
-    h1: np.ndarray, h2: np.ndarray, blooms: list[tuple[int, np.ndarray, int, int]]
-) -> list[int]:
-    """Which of ``blooms`` (id, bits, m, k) MIGHT contain any of the
-    hashed keys. uint64 arithmetic wraps mod 2^64, matching the build
-    side's explicit mask, so probe positions agree bit-for-bit."""
-    out = []
-    if len(h1) == 0:
-        return out
-    for fid, bits, m, k in blooms:
-        ks = np.arange(k, dtype=np.uint64)
-        pos = (h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(m)
-        byte_i = (pos >> np.uint64(3)).astype(np.int64)
-        bit = np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
-        probe_hits = (bits[byte_i] & bit) != 0
-        if bool(probe_hits.all(axis=1).any()):
-            out.append(fid)
-    return out
+def might_contain(
+    bloom: tuple[np.ndarray, int, int], h1: np.ndarray, h2: np.ndarray
+) -> np.ndarray:
+    """Per hashed key: whether the decoded filter ``bloom`` (bits, m, k)
+    MIGHT hold it — the one membership rule, shared by the write-side
+    key probe and the read-side point lookup. uint64 arithmetic wraps
+    mod 2^64, matching the build side's explicit mask, so probe
+    positions agree bit-for-bit."""
+    bits, m, k = bloom
+    ks = np.arange(k, dtype=np.uint64)
+    pos = (h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(m)
+    byte_i = (pos >> np.uint64(3)).astype(np.int64)
+    bit = np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
+    return ((bits[byte_i] & bit) != 0).all(axis=1)

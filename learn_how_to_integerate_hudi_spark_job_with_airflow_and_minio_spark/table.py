@@ -71,9 +71,10 @@ BUCKET_COL = "_bucket_id"
 # O(commits): at 100× scale (years of frequent commits × 10⁵ live file
 # entries) full-timeline replay becomes a per-query driver bottleneck.
 CHECKPOINT_EVERY = 10
-# Range-prune only pays for itself past this many live files: under it the
-# prune's one-job min/max agg exceeds what an unpruned (column-pruned)
-# touched-files scan costs. See Table._prune_by_keys.
+# Key-range tests join a keyed write's key-probe pass only past this many
+# live files: under it, a table with no bloom or bucket index would spend
+# the pass's Spark job on a prune that an unpruned (column-pruned)
+# touched-files scan does not need. See Table._key_probe.
 PRUNE_MIN_FILES = 16
 # sentinel prefix for the CDC op-code raise_error gate: apply_cdc_feed
 # matches it in the captured Spark exception text to re-raise the
@@ -245,7 +246,7 @@ class Table:
         # never outlive the commit they served.
         self._pending_unpersist: list[DataFrame] = []
         # per-commit bloom sidecars, loaded at most once per handle
-        # (sidecars are immutable once written — see _prune_by_bloom)
+        # (sidecars are immutable once written — see _bloom_for_entries)
         self._bloom_sidecars: dict[str, dict] = {}
         # last bloom-prune outcome, for tests and the bench demo
         self._last_bloom_prune: dict[str, int] | None = None
@@ -4069,45 +4070,185 @@ class Table:
         return out
 
     def _prune_by_keys(self, entries: list[dict], keys: DataFrame) -> list[dict]:
-        """Key-range file pruning (BLOOM-index analog, K8): skip files whose
-        [min,max] key stats can't contain any batch key; then, when a
+        """Candidate files for a keyed write: the one key-probe pass
+        (:meth:`_key_probe`: bucket, range and bloom tests), then, when a
         record-level index exists, exact per-key containment pruning
-        (:meth:`TableServices.build_record_index`).
+        (:meth:`TableServices.build_record_index`)."""
+        return self._prune_by_record_index(self._key_probe(entries, keys), keys)
 
-        The range prune costs one Spark job (``keys.agg(min,max)``), so it
-        only runs when the live set is big enough for pruning to beat the
-        job it spends: below :data:`PRUNE_MIN_FILES` files, the downstream
-        touched-files semi-join scans a key-column-pruned handful of
-        footers anyway, and the agg job is pure per-commit overhead (r6
-        A/B at sf0.1: merge commit 1.07 s → 0.81 s with the gate). At the
-        10⁵-file scale the prune exists for, the gate never triggers."""
-        entries = self._prune_by_bucket(entries, keys)
-        if len(entries) <= PRUNE_MIN_FILES:
-            # bloom (when the table opted in) still runs under the range-
-            # prune gate: membership beats min/max exactly when ranges
-            # can't discriminate, regardless of file count
-            return self._prune_by_record_index(
-                self._prune_by_bloom(entries, keys), keys
-            )
-        stats_entries = [e for e in entries if self.key in e.get("stats", {})]
-        if len(stats_entries) != len(entries):
-            # some files lack key stats → range prune can't run safely;
-            # membership filters are per-file and unaffected
-            return self._prune_by_bloom(entries, keys)
-        row = keys.agg(
-            F.min(self.key).alias("lo"), F.max(self.key).alias("hi")
-        ).collect()[0]
-        lo, hi = row["lo"], row["hi"]
-        if lo is None:
-            return []
-        out = []
-        for e in entries:
-            fmin, fmax = e["stats"][self.key]
-            if fmin is None or fmax is None or not (hi < fmin or lo > fmax):
-                out.append(e)
-        return self._prune_by_record_index(
-            self._prune_by_bloom(out, keys), keys
+    def _key_probe(self, entries: list[dict], keys: DataFrame) -> list[dict]:
+        """The ``entries`` that may hold one of the batch ``keys`` — Hudi's
+        HoodieBloomIndex key → candidate-file lookup. The driver gives
+        each file up to three tests, from metadata alone:
+
+        - bucket: the file's ``_bucket_id`` [min, max] under the modulus
+          it was written with (bucket tables; :meth:`_entry_modulus`);
+        - range: the file's key [min, max] footer stats, when the live
+          set is over :data:`PRUNE_MIN_FILES` files and the key's
+          canonical form (:func:`_jsonable`) sorts like the column:
+          integral, string and date keys;
+        - bloom: the file's filter (bloom tables, up to
+          :data:`.bloom.BLOOM_BROADCAST_CAP` total bytes; see
+          :mod:`.bloom`).
+
+        A file is kept when at least one key passes every test it has;
+        a file with no test is kept. That is never looser than testing
+        the batch's key envelope and then each filter, and the touched
+        set (:meth:`_touched`) is the same either way. The tests
+        broadcast, and ONE map-only Spark job — no aggregate, so no
+        exchange — tests each partition's keys and returns the ids of
+        the files they hit (plus the bucket ids seen, for
+        ``_last_bucket_prune``). No file with a test → no job.
+
+        A keys frame typed in another class than the table key (int keys
+        against a string-keyed table — Spark would cast in the
+        downstream semi-join) keeps every file: its buckets, ranges and
+        hashes are in the wrong domain."""
+        n = self._bucket_count()
+        bloomed = self.meta.get("index_type") == "bloom"
+        ranged = len(entries) > PRUNE_MIN_FILES
+        if not entries or not (n or bloomed or ranged):
+            return entries
+        schema = self.effective_schema()
+        tf = (
+            next((f for f in schema.fields if f.name == self.key), None)
+            if schema is not None
+            else None
         )
+        bf = next((f for f in keys.schema.fields if f.name == self.key), None)
+        if (
+            tf is None
+            or bf is None
+            or _type_class(tf.dataType) != _type_class(bf.dataType)
+        ):
+            return entries
+        from pyspark.sql.types import DateType
+
+        from .bloom import (
+            BLOOM_BROADCAST_CAP,
+            bloom_decode,
+            hash_pairs_array,
+            might_contain,
+        )
+
+        # canonical values sort like the column for integral, string and
+        # date keys, when batch and table share the domain (a timestamp
+        # batch against date stats would not); timestamps carry no
+        # footer key stats, float keys can be NaN
+        domains = {
+            "date" if isinstance(f.dataType, DateType) else _type_class(f.dataType)
+            for f in (tf, bf)
+        }
+        ranged = ranged and len(domains) == 1 and domains <= {
+            "integral", "string", "date"
+        }
+        blooms = self._bloom_for_entries(entries) if bloomed else []
+        if sum(b["m"] // 8 for b in blooms if b is not None) > BLOOM_BROADCAST_CAP:
+            blooms = []
+        covered = sum(b is not None for b in blooms)
+        # after a metadata-only resize_buckets the live set can mix
+        # moduli, and a key's bucket differs per modulus: one bucket
+        # column per DISTINCT modulus (normally exactly one)
+        moduli = sorted({self._entry_modulus(e, n) for e in entries}) if n else []
+        specs = []
+        for i, e in enumerate(entries):
+            stats = e.get("stats", {})
+            rng = stats.get(self.key) if ranged else None
+            if rng is not None and None in rng:
+                rng = None
+            bst = stats.get(BUCKET_COL) if n else None
+            bucket = (
+                (moduli.index(self._entry_modulus(e, n)), int(bst[0]), int(bst[1]))
+                if bst and bst[0] is not None
+                else None
+            )
+            bloom = blooms[i] if blooms else None
+            if rng is not None or bucket is not None or bloom is not None:
+                specs.append((i, rng, bucket, bloom and bloom_decode(bloom)))
+        if not specs:
+            return entries
+        bc = self.spark.sparkContext.broadcast(specs)
+        sort_keys = any(s[1] is not None for s in specs)
+
+        def probe(batches):
+            import bisect
+
+            import numpy as np
+            import pyarrow as pa
+
+            hits: set[int] = set()
+            seen: set[tuple[int, int]] = set()
+            for b in batches:
+                raw = b.column(0).to_pylist()
+                live = [i for i, v in enumerate(raw) if v is not None]
+                if not live:
+                    continue
+                vals = [_jsonable(raw[i]) for i in live]
+                bids = [
+                    b.column(j + 1).to_numpy(zero_copy_only=False)[live]
+                    for j in range(len(moduli))
+                ]
+                if sort_keys:
+                    order = sorted(range(len(vals)), key=vals.__getitem__)
+                    vals = [vals[i] for i in order]
+                    bids = [a[order] for a in bids]
+                for j, a in enumerate(bids):
+                    seen.update((j, int(x)) for x in np.unique(a))
+                if covered:
+                    h1, h2 = hash_pairs_array(vals)
+                for fid, rng, bucket, bloom in bc.value:
+                    if fid in hits:
+                        continue
+                    lo, hi = 0, len(vals)
+                    if rng is not None:
+                        lo = bisect.bisect_left(vals, rng[0])
+                        hi = bisect.bisect_right(vals, rng[1])
+                        if lo >= hi:
+                            continue
+                    ok = np.ones(hi - lo, dtype=bool)
+                    if bucket is not None:
+                        a = bids[bucket[0]][lo:hi]
+                        ok &= (a >= bucket[1]) & (a <= bucket[2])
+                    if bloom is not None:
+                        ok &= might_contain(bloom, h1[lo:hi], h2[lo:hi])
+                    if ok.any():
+                        hits.add(fid)
+            out = [(f, None, None) for f in hits] + [(None, *p) for p in seen]
+            if out:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, pa.int32()) for c in zip(*out)],
+                    names=["_f", "_n", "_b"],
+                )
+
+        col = self._bucket_key_col(keys.schema) if n else None
+        rows = (
+            keys.select(
+                self.key,
+                *(
+                    F.pmod(F.hash(col), F.lit(nn)).cast("int").alias(f"_b{nn}")
+                    for nn in moduli
+                ),
+            )
+            .mapInArrow(probe, "_f int, _n int, _b int")
+            .collect()
+        )
+        hit = {r["_f"] for r in rows}
+        tested = {s[0] for s in specs}
+        kept = [e for i, e in enumerate(entries) if i not in tested or i in hit]
+        if covered:
+            self._last_bloom_prune = {
+                "candidates": len(entries),
+                "covered": covered,
+                "kept": len(kept),
+            }
+        if n:
+            self._last_bucket_prune = {
+                "candidates": len(entries),
+                "buckets": len({(r["_n"], r["_b"]) for r in rows} - {(None, None)}),
+                "kept": len(kept),
+                "moduli": moduli,
+            }
+        return kept
 
     # -- bloom file index (Hudi hoodie.index.type=BLOOM analog) ---------
 
@@ -4182,87 +4323,6 @@ class Table:
             out.append(self._bloom_sidecars[token]["files"].get(path))
         return out
 
-    def _prune_by_bloom(
-        self, entries: list[dict], keys: DataFrame
-    ) -> list[dict]:
-        """Per-file MEMBERSHIP pruning of merge candidates (the Hudi
-        BLOOM index step). Range stats drop a file only when the batch
-        envelope misses its [min, max]; on an interleaved key layout —
-        every file spanning the whole domain — that keeps everything,
-        and a scattered point-update batch rewrites nothing yet reads
-        the world. Testing batch keys against per-file filters keeps
-        only files that MIGHT hold a touched key (false positives cost
-        one extra file read; false negatives are impossible for covered
-        files).
-
-        Distributed probe: candidate filters broadcast (capped at
-        :data:`.bloom.BLOOM_BROADCAST_CAP` bytes — past ~50k covered
-        files the record index is the right tool, mirroring Hudi's own
-        BLOOM → record-index escalation), keys hashed + tested map-only
-        with a per-partition distinct, one tiny collect of hit file
-        ids. No shuffle, O(|batch| × candidates) bit tests.
-        """
-        if self.meta.get("index_type") != "bloom" or not entries:
-            return entries
-        blooms = self._bloom_for_entries(entries)
-        covered = [i for i, b in enumerate(blooms) if b is not None]
-        if not covered:
-            return entries
-        from .bloom import (
-            BLOOM_BROADCAST_CAP,
-            bloom_decode,
-            files_hit,
-            hash_pairs_array,
-        )
-
-        total_bytes = sum(blooms[i]["m"] // 8 for i in covered)
-        if total_bytes > BLOOM_BROADCAST_CAP:
-            return entries
-        decoded = [(i, *bloom_decode(blooms[i])) for i in covered]
-        sc = self.spark.sparkContext
-        bc = sc.broadcast(decoded)
-
-        def probe(batches):
-            import pyarrow as pa
-
-            hits: set[int] = set()
-            for b in batches:
-                vals = b.column(0).to_pylist()
-                if not vals:
-                    continue
-                h1, h2 = hash_pairs_array(vals)
-                hits.update(files_hit(h1, h2, bc.value))
-            if hits:
-                yield pa.RecordBatch.from_pydict(
-                    {"_f": pa.array(sorted(hits), type=pa.int32())}
-                )
-
-        # mapInArrow (not .rdd.mapPartitions): keys cross the boundary
-        # as Arrow batches instead of pickled Rows, and the per-task hit
-        # sets fold through a partial-aggregated collect_set — one
-        # map-side-combined job instead of an RDD distinct shuffle
-        # (guide §4.1/§1.4: .rdd converts every row to external objects
-        # and hides the query from the SQL tab).
-        row = (
-            keys.select(self.key)
-            .mapInArrow(probe, "_f int")
-            .agg(F.collect_set("_f"))
-            .collect()[0]
-        )
-        hit = set(row[0] or [])
-        covered_set = set(covered)
-        kept = [
-            e
-            for i, e in enumerate(entries)
-            if i not in covered_set or i in hit
-        ]
-        self._last_bloom_prune = {
-            "candidates": len(entries),
-            "covered": len(covered),
-            "kept": len(kept),
-        }
-        return kept
-
     def _prune_by_bloom_value(
         self, entries: list[dict], value
     ) -> list[dict]:
@@ -4272,15 +4332,14 @@ class Table:
         the manifest loop that produced ``entries``."""
         if self.meta.get("index_type") != "bloom" or not entries:
             return entries
-        from .bloom import bloom_decode, files_hit, hash_pairs_array
+        from .bloom import bloom_decode, hash_pairs_array, might_contain
 
-        blooms = self._bloom_for_entries(entries)
         h1, h2 = hash_pairs_array([value])
-        out = []
-        for e, b in zip(entries, blooms):
-            if b is None or files_hit(h1, h2, [(0, *bloom_decode(b))]):
-                out.append(e)
-        return out
+        return [
+            e
+            for e, b in zip(entries, self._bloom_for_entries(entries))
+            if b is None or might_contain(bloom_decode(b), h1, h2)[0]
+        ]
 
     # -- bucket index (Hudi hoodie.index.type=BUCKET analog) ------------
 
@@ -4336,82 +4395,6 @@ class Table:
             or current
         )
 
-    def _prune_by_bucket(
-        self, entries: list[dict], keys: DataFrame
-    ) -> list[dict]:
-        """Per-file bucket-range pruning of merge candidates (the Hudi
-        BUCKET index step): batch keys resolve to ≤ bucket_count bucket
-        ids (one tiny distinct job), and a file is kept only when its
-        persisted ``_bucket_id`` [min,max] range — tight, because every
-        write range-partitions on the bucket column — contains one of
-        them. Zero index I/O, zero false negatives (a key's bucket is a
-        pure function of the key), O(files · log buckets) driver work:
-        the candidate set is bounded by the batch's buckets no matter
-        how interleaved the KEY ranges are. Files without bucket stats
-        (none, for a creation-time mode) are kept conservatively."""
-        n = self._bucket_count()
-        if not n or not entries:
-            return entries
-        # the batch must hash in the TABLE key's domain: a cross-class
-        # keys frame (int keys against a string-keyed table — Spark
-        # would implicitly cast in the downstream semi-join) buckets
-        # differently than the write side, so pruning on it could drop
-        # files that hold real matches. Fail open on any mismatch.
-        schema = self.effective_schema()
-        tf = (
-            next((f for f in schema.fields if f.name == self.key), None)
-            if schema is not None
-            else None
-        )
-        bf = next((f for f in keys.schema.fields if f.name == self.key), None)
-        if (
-            tf is None
-            or bf is None
-            or _type_class(tf.dataType) != _type_class(bf.dataType)
-        ):
-            return entries
-        col = self._bucket_key_col(keys.schema)
-        if col is None:
-            return entries
-        # files record the modulus they were written under (bucket_n) —
-        # after resize_buckets the live set can mix generations, and a
-        # key's bucket id differs per modulus, so the batch's bucket set
-        # is resolved once per DISTINCT modulus (normally exactly one
-        # tiny job; two only during a metadata-only resize transition).
-        # Legacy entries (no bucket_n) resolve via _entry_modulus.
-        moduli = sorted({self._entry_modulus(e, n) for e in entries})
-        sets: dict[int, list[int]] = {}
-        for nn in moduli:
-            rows = (
-                keys.select(
-                    F.pmod(F.hash(col), F.lit(nn)).cast("int").alias("_b")
-                )
-                .distinct()
-                .collect()
-            )
-            sets[nn] = sorted(r["_b"] for r in rows if r["_b"] is not None)
-        import bisect
-
-        out = []
-        for e in entries:
-            st = e.get("stats", {}).get(BUCKET_COL)
-            if not st or st[0] is None:
-                out.append(e)
-                continue
-            buckets = sets[self._entry_modulus(e, n)]
-            if not buckets:
-                continue
-            i = bisect.bisect_left(buckets, int(st[0]))
-            if i < len(buckets) and buckets[i] <= int(st[1]):
-                out.append(e)
-        self._last_bucket_prune = {
-            "candidates": len(entries),
-            "buckets": sum(len(v) for v in sets.values()),
-            "kept": len(out),
-            "moduli": moduli,
-        }
-        return out
-
     def _prune_by_bucket_value(self, entries: list[dict], value) -> list[dict]:
         """Read-side point-lookup pruning for bucket tables: resolve the
         value's bucket once (a 1-row Spark expression — kept Spark-side
@@ -4434,7 +4417,7 @@ class Table:
             return entries
         # resolve the value's bucket once per DISTINCT file modulus
         # (files record bucket_n; generations can mix after a
-        # metadata-only resize_buckets — see _prune_by_bucket)
+        # metadata-only resize_buckets — see _key_probe)
         moduli = sorted({self._entry_modulus(e, n) for e in entries})
         bmap: dict[int, int] = {}
         for nn in moduli:
@@ -4670,7 +4653,7 @@ class Table:
             # bucket table: stamp pmod(hash(key), N) and RANGE-partition
             # on it so every file covers a tight contiguous bucket range
             # — the persisted [min,max] of BUCKET_COL is what
-            # _prune_by_bucket consults. The column lives only in the
+            # _key_probe consults. The column lives only in the
             # parquet files (the manifest schema is the caller's frame),
             # so reads project it away for free. One file group per
             # touched bucket per commit — Hudi's BUCKET index layout.

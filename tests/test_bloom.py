@@ -14,8 +14,8 @@ from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.bloom i
     BLOOM_K,
     bloom_build,
     bloom_decode,
-    files_hit,
     hash_pairs_array,
+    might_contain,
 )
 from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.sql_ddl import (
     execute_ddl,
@@ -47,22 +47,15 @@ def _interleaved(spark, n=10000, nfiles=8):
 def test_bloom_no_false_negatives():
     b = bloom_build(list(range(1000)))
     h1, h2 = hash_pairs_array(list(range(1000)))
-    decoded = [(0, *bloom_decode(b))]
     # every inserted key must hit — false negatives are correctness bugs
-    for i in range(1000):
-        assert files_hit(h1[i : i + 1], h2[i : i + 1], decoded) == [0]
+    assert might_contain(bloom_decode(b), h1, h2).all()
 
 
 def test_bloom_false_positive_rate_bounded():
     b = bloom_build(list(range(1000)))
-    decoded = [(0, *bloom_decode(b))]
     probes = [f"absent-{i}" for i in range(2000)]
     h1, h2 = hash_pairs_array(probes)
-    fp = sum(
-        1
-        for i in range(len(probes))
-        if files_hit(h1[i : i + 1], h2[i : i + 1], decoded)
-    )
+    fp = int(might_contain(bloom_decode(b), h1, h2).sum())
     # sized for ~1% at 10 bits/key, k=7; allow generous slack
     assert fp / len(probes) < 0.05
 
@@ -70,19 +63,17 @@ def test_bloom_false_positive_rate_bounded():
 def test_bloom_int_and_str_canonicalization_agree():
     # build from python ints (pyarrow to_pylist domain), probe with the
     # same ints from Spark rows — str() canonicalization must agree
-    b = bloom_build([5, 42, 9999])
-    h1, h2 = hash_pairs_array([5])
-    assert files_hit(h1, h2, [(0, *bloom_decode(b))])
-    h1, h2 = hash_pairs_array([6])
-    hit = files_hit(h1, h2, [(0, *bloom_decode(b))])
-    assert hit in ([], [0])  # absent → only a (rare) false positive
+    b = bloom_decode(bloom_build([5, 42, 9999]))
+    assert might_contain(b, *hash_pairs_array([5])).tolist() == [True]
+    # absent → only a (rare) false positive, one answer per key
+    assert might_contain(b, *hash_pairs_array([6])).shape == (1,)
     assert bloom_build([5])["k"] == BLOOM_K
 
 
 def test_bloom_empty_probe_and_empty_build():
     b = bloom_build([])
     h1, h2 = hash_pairs_array([])
-    assert files_hit(h1, h2, [(0, *bloom_decode(b))]) == []
+    assert might_contain(bloom_decode(b), h1, h2).shape == (0,)
 
 
 # -- write-side sidecars + merge pruning --------------------------------
@@ -182,6 +173,11 @@ def test_bloom_upsert_correct_under_many_random_batches(spark, tpath):
         rows = [(k, 10000 + i * 100 + k) for k in ks]
         for k, v in rows:
             expect[k] = v
+        # no false negatives: every file holding a batch key is a candidate
+        entries = t.current_files()
+        keys = spark.createDataFrame([(k,) for k in ks], "k long")
+        kept = t._prune_by_keys(entries, keys)
+        assert all(e in kept for e in t._touched(entries, keys))
         t.upsert(spark.createDataFrame(rows, "k long, v long"))
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert got == expect
@@ -220,7 +216,7 @@ def test_bloom_uncovered_files_fall_through(spark, tpath):
     assert any(b is None for b in blooms) and any(b is not None for b in blooms)
     # prune keeps every uncovered file
     keys = spark.createDataFrame([(5,)], "k long")
-    kept = t._prune_by_bloom(t.current_files(), keys)
+    kept = t._key_probe(t.current_files(), keys)
     uncovered = sum(1 for b in blooms if b is None)
     assert len(kept) >= uncovered
 
@@ -244,7 +240,8 @@ def test_bloom_backfill_service_and_drop(spark, tpath):
         assert os.path.getmtime(os.path.join(tpath, "_index", "bloom", f)) == m
     TableServices(t2).drop_bloom_index()
     assert t2.meta.get("index_type") is None
-    assert t2._prune_by_bloom(t2.current_files(), None) == t2.current_files()
+    keys = spark.createDataFrame([(5,)], "k long")
+    assert t2._key_probe(t2.current_files(), keys) == t2.current_files()
 
 
 def test_bloom_rejects_unsupported_key_type(spark, tpath):

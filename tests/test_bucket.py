@@ -100,6 +100,11 @@ def test_bucket_correct_under_many_random_batches(spark, tpath):
         rows = [(k, 10000 + i * 100 + k) for k in ks]
         for k, v in rows:
             expect[k] = v
+        # no false negatives: every file holding a batch key is a candidate
+        entries = t.current_files()
+        keys = spark.createDataFrame([(k,) for k in ks], "k long")
+        kept = t._prune_by_keys(entries, keys)
+        assert all(e in kept for e in t._touched(entries, keys))
         t.upsert(spark.createDataFrame(rows, "k long, v long"))
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
     assert got == expect
@@ -278,7 +283,7 @@ def test_bucket_prune_fails_open_on_cross_class_keys(spark, tpath):
     t.bulk_insert(df.repartition(4, "name"))
     entries = t.current_files()
     int_keys = spark.createDataFrame([(5,), (7,)], "name long")
-    assert t._prune_by_bucket(entries, int_keys) == entries
+    assert t._key_probe(entries, int_keys) == entries
 
 
 def test_bucket_point_value_out_of_domain_fails_open(spark, tpath):

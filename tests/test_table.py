@@ -861,11 +861,12 @@ def test_record_index_exact_pruning(spark, tpath):
 
 
 def test_range_prune_gated_on_file_count(spark, tpath):
-    """Range prune spends one Spark job (keys min/max agg), so it is
-    gated on live-set size: at or under PRUNE_MIN_FILES files the gate
-    returns everything unpruned (the affected-files semi-join is cheaper
-    than the agg job — r6 A/B: 1.07 s → 0.81 s per merge commit); past
-    the gate, stats pruning kicks in — the 10⁵-file scale path."""
+    """Range tests join the key probe only past PRUNE_MIN_FILES live
+    files: at or under the gate a table with no bloom or bucket index
+    gets no probe pass at all (its Spark job would cost more than the
+    touched-files semi-join it saves — r6 A/B: 1.07 s → 0.81 s per merge
+    commit); past the gate, stats pruning kicks in — the 10⁵-file scale
+    path."""
     from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
         PRUNE_MIN_FILES,
     )
@@ -892,6 +893,79 @@ def test_range_prune_gated_on_file_count(spark, tpath):
     t.upsert(df_of(spark, [(25, 2, "upd")]))
     got = {r["id"]: r["val"] for r in t.snapshot().collect()}
     assert got[25] == "upd" and got[24] == "v24"
+
+
+def _one_key_per_file(spark, path, key_type, keys):
+    """A table whose every file holds one key: disjoint key ranges."""
+    t = Table.create(
+        spark, path, key="k", precombine="ver", max_records_per_file=1
+    )
+    t.bulk_insert(
+        spark.createDataFrame([(k, 1) for k in keys], f"k {key_type}, ver long")
+        .coalesce(1)
+    )
+    return t
+
+
+def test_key_probe_keeps_only_files_a_key_falls_in(spark, tpath):
+    """Range tests are per key: a batch with one key at each end of the
+    domain keeps the two files holding them, where the batch's [min, max]
+    envelope overlaps every file. No file holding a batch key is ever
+    dropped."""
+    import random
+
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        PRUNE_MIN_FILES,
+    )
+
+    n = PRUNE_MIN_FILES + 4
+    t = _one_key_per_file(spark, tpath, "long", [10 * i for i in range(n)])
+    entries = t.current_files()
+    assert len(entries) == n
+    ends = spark.createDataFrame([(0,), (10 * (n - 1),)], "k long")
+    assert len(t._prune_by_keys(entries, ends)) == 2
+    rng = random.Random(5)
+    for _ in range(3):
+        keys = spark.createDataFrame(
+            [(k,) for k in rng.sample(range(10 * n), 4)], "k long"
+        )
+        kept = t._prune_by_keys(entries, keys)
+        assert all(e in kept for e in t._touched(entries, keys))
+
+
+@pytest.mark.parametrize("key_type", ["date", "timestamp"])
+def test_temporal_key_upsert_past_range_gate(spark, tpath, key_type):
+    """Footer stats keep a date key as its ISO string; the key probe
+    compares batch keys in that same canonical form, so a date-keyed
+    table over PRUNE_MIN_FILES files upserts and prunes to the one file
+    holding the key. Timestamp keys carry no footer stats and keep every
+    file."""
+    import datetime
+
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        PRUNE_MIN_FILES,
+    )
+
+    base = (
+        datetime.date(2024, 1, 1)
+        if key_type == "date"
+        else datetime.datetime(2024, 1, 1)
+    )
+    days = [base + datetime.timedelta(days=i) for i in range(PRUNE_MIN_FILES + 2)]
+    t = _one_key_per_file(spark, tpath, key_type, days)
+    entries = t.current_files()
+    assert len(entries) == len(days)
+    keys = spark.createDataFrame([(days[3],)], f"k {key_type}")
+    kept = t._prune_by_keys(entries, keys)
+    assert len(kept) == (1 if key_type == "date" else len(days))
+    # timestamp keys against date stats share no canonical form: every
+    # file stays a candidate (the semi-join casts the date up)
+    ts = spark.createDataFrame([(datetime.datetime(2024, 1, 4),)], "k timestamp")
+    assert t._prune_by_keys(entries, ts) == entries
+    t.upsert(spark.createDataFrame([(days[3], 2)], f"k {key_type}, ver long"))
+    assert rows_of(t.snapshot(), "k", "ver") == [
+        (d, 2 if d == days[3] else 1) for d in days
+    ]
 
 
 def test_record_index_stale_is_safe(spark, tpath):
@@ -2816,8 +2890,9 @@ def test_merge_delete_flag_keeps_row_whose_update_is_quarantined(
 
 
 def _count_jobs(spark, label, fn):
-    """Spark jobs one call issues: run ``fn`` under its own job group
-    and read the group back from the status tracker."""
+    """Spark jobs and tasks one call issues: run ``fn`` under its own
+    job group and read the group back from the status tracker. Tasks
+    are the completed ones, so a skipped stage counts none."""
     sc = spark.sparkContext
     group = f"job-budget-{label}"
     sc.setJobGroup(group, label)
@@ -2826,7 +2901,15 @@ def _count_jobs(spark, label, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        stage.numCompletedTasks
+        for job in jobs
+        for sid in tracker.getJobInfo(job).stageIds
+        if (stage := tracker.getStageInfo(sid)) is not None
+    )
+    return len(jobs), tasks
 
 
 # Spark jobs per commit type on the fixture below, as measured before the
@@ -2858,6 +2941,21 @@ JOB_BUDGETS = {
     "expression_index_build_incremental": 2,
     "secondary_index_snapshot": 4,
     "expression_index_read_where": 3,
+    # keyed writes whose candidates go through the key probe (bucket,
+    # range and bloom tests in one Spark job); counted after the three
+    # tests were folded into that one pass (before, run alone: 12, 14
+    # and 12). Run alone, the range-pruned upsert issues one job and one
+    # task fewer (9 and 22) than inside the whole module.
+    "bloom_upsert": 11,
+    "bucket_upsert": 13,
+    "range_pruned_upsert": 10,
+}
+# Spark tasks of the key-probe rows, counted like their jobs (before,
+# run alone: 25, 32 and 28).
+TASK_BUDGETS = {
+    "bloom_upsert": 24,
+    "bucket_upsert": 31,
+    "range_pruned_upsert": 23,
 }
 
 
@@ -2895,6 +2993,22 @@ def test_commit_job_budgets(spark, tmp_path):
         spark, str(tmp_path / "indexed"), key="id", precombine="ver"
     ))
     svc = TableServices(indexed)
+    bloomed = three_files(Table.create(
+        spark, str(tmp_path / "bloom"), key="id", precombine="ver",
+        index_type="bloom",
+    ))
+    bucketed = three_files(Table.create(
+        spark, str(tmp_path / "bucket"), key="id", precombine="ver",
+        index_type="bucket", bucket_count=4,
+    ))
+    # one key per file over PRUNE_MIN_FILES files: range tests apply
+    ranged = Table.create(
+        spark, str(tmp_path / "ranged"), key="id", precombine="ver",
+        max_records_per_file=1,
+    )
+    ranged.bulk_insert(
+        spark.range(0, 20).coalesce(1).selectExpr("id", "1L AS ver", "'v' AS val")
+    )
     upd = [("update", None, {"val": "s.val"})]
     ins = [("insert", None, None)]
     calls = {
@@ -2958,13 +3072,24 @@ def test_commit_job_budgets(spark, tmp_path):
         "expression_index_read_where": lambda: indexed.read_where(
             "upper(val) = 'N'"
         ).collect(),
+        "bloom_upsert": lambda: bloomed.upsert(rows((5, 2, "u"), (100, 1, "n"))),
+        "bucket_upsert": lambda: bucketed.upsert(
+            rows((5, 2, "u"), (100, 1, "n"))
+        ),
+        "range_pruned_upsert": lambda: ranged.upsert(
+            rows((5, 2, "u"), (100, 1, "n"))
+        ),
     }
     used = {name: _count_jobs(spark, name, fn) for name, fn in calls.items()}
-    print("jobs per commit:", used)
+    print("jobs, tasks per commit:", used)
     over = {
-        n: (used[n], b) for n, b in JOB_BUDGETS.items() if used[n] > b
+        n: (used[n][0], b) for n, b in JOB_BUDGETS.items() if used[n][0] > b
+    } | {
+        f"{n} tasks": (used[n][1], b)
+        for n, b in TASK_BUDGETS.items()
+        if used[n][1] > b
     }
-    assert not over, f"commits over their job budget (used, budget): {over}"
+    assert not over, f"commits over their budget (used, budget): {over}"
     assert rows_of(cow.snapshot().where("id = 11"), "val") == [("c",)]
     assert parted.snapshot().where("grp = 'g1'").count() == 0
     assert rows_of(mor.snapshot().where("id IN (5, 7)"), "id", "val") == [
@@ -2978,6 +3103,17 @@ def test_commit_job_budgets(spark, tmp_path):
         live, "upper(val) = 'N'"
     )) == 1
     assert rows_of(indexed.read_where("upper(val) = 'N'"), "id") == [(100,)]
+    # the key probe narrowed each keyed write's candidates
+    for stats in (bloomed._last_bloom_prune, bucketed._last_bucket_prune):
+        assert stats["kept"] < stats["candidates"], stats
+    keys = spark.createDataFrame([(5,)], "id long")
+    kept = ranged._prune_by_keys(ranged.current_files(), keys)
+    # the upsert also wrote an empty, stats-less file: kept untested
+    assert [e["stats"].get("id") for e in kept if e["rows"]] == [[5, 5]]
+    for t in (bloomed, bucketed, ranged):
+        assert rows_of(t.snapshot().where("id IN (5, 100)"), "id", "val") == [
+            (5, "u"), (100, "n")
+        ]
 
 
 def test_rewrite_family_cow_matches_mor(spark, tmp_path):
