@@ -34,11 +34,15 @@ broadcasts candidate filters inside the keyed write's one key-probe pass
 (:meth:`Table._key_probe`: a map-only job whose tasks return the ids of
 the files their keys hit, no aggregate) and tests keys with
 :func:`might_contain` (numpy-vectorized double hashing — no per-key
-Python loop on the hot path). Broadcasting caps at
+Python loop on the hot path). Past :data:`BLOOM_NARROW_BYTES` of
+filters, a table with key range stats first takes the batch's key
+envelope (one extra Spark job) so only the filters of files it overlaps
+ship — time-ordered keys narrow to a handful. Broadcasting caps at
 :data:`BLOOM_BROADCAST_CAP` total filter bytes (~50k files at default
-sizing); past that the prune declines and the record-level index — the
-engine's exact, shuffle-joined lookup structure — is the right tool,
-mirroring Hudi's own BLOOM → record-index escalation.
+sizing); files whose filter does not fit keep only their range and
+bucket tests, and the record-level index — the engine's exact,
+shuffle-joined lookup structure — is the right tool, mirroring Hudi's
+own BLOOM → record-index escalation.
 """
 
 from __future__ import annotations
@@ -53,9 +57,13 @@ import numpy as np
 # reading one extra candidate file during merge resolution.
 BLOOM_BITS_PER_KEY = 10
 BLOOM_K = 7
-# Decline to broadcast filters past this many total bytes — at that
+# Broadcast no more than this many filter bytes per key probe — at that
 # file count the record index (exact, distributed join) supersedes.
 BLOOM_BROADCAST_CAP = 64 * 1024 * 1024
+# Past this many filter bytes, the key probe spends one Spark job on the
+# batch's key envelope so only the filters of overlapping files ship
+# (~3.4k files of 1k keys); under it, shipping every filter is cheaper.
+BLOOM_NARROW_BYTES = 4 * 1024 * 1024
 
 _MASK64 = (1 << 64) - 1
 

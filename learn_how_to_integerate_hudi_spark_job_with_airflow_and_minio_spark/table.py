@@ -4084,21 +4084,26 @@ class Table:
         - bucket: the file's ``_bucket_id`` [min, max] under the modulus
           it was written with (bucket tables; :meth:`_entry_modulus`);
         - range: the file's key [min, max] footer stats, when the live
-          set is over :data:`PRUNE_MIN_FILES` files and the key's
-          canonical form (:func:`_jsonable`) sorts like the column:
-          integral, string and date keys;
-        - bloom: the file's filter (bloom tables, up to
-          :data:`.bloom.BLOOM_BROADCAST_CAP` total bytes; see
-          :mod:`.bloom`).
+          set is over :data:`PRUNE_MIN_FILES` files and batch and table
+          key share a domain that sorts like the column (integral,
+          fractional, string or date; :func:`_probe_domain`);
+        - bloom: the file's filter (bloom tables; see :mod:`.bloom`).
+          Filters broadcast up to :data:`.bloom.BLOOM_BROADCAST_CAP`
+          total bytes; files whose filter does not fit keep their other
+          tests. Past :data:`.bloom.BLOOM_NARROW_BYTES` of filters on a
+          ranged table, one extra Spark job takes the batch's key
+          envelope first, and only the files it overlaps stay candidates
+          and ship their filters.
 
         A file is kept when at least one key passes every test it has;
         a file with no test is kept. That is never looser than testing
         the batch's key envelope and then each filter, and the touched
         set (:meth:`_touched`) is the same either way. The tests
         broadcast, and ONE map-only Spark job — no aggregate, so no
-        exchange — tests each partition's keys and returns the ids of
-        the files they hit (plus the bucket ids seen, for
-        ``_last_bucket_prune``). No file with a test → no job.
+        exchange — tests each partition's keys
+        (:func:`_key_probe_batch`) and returns the ids of the files they
+        hit (plus the bucket ids seen, for ``_last_bucket_prune``). No
+        file with a test → no job.
 
         A keys frame typed in another class than the table key (int keys
         against a string-keyed table — Spark would cast in the
@@ -4122,98 +4127,88 @@ class Table:
             or _type_class(tf.dataType) != _type_class(bf.dataType)
         ):
             return entries
-        from pyspark.sql.types import DateType
+        import numpy as np
 
-        from .bloom import (
-            BLOOM_BROADCAST_CAP,
-            bloom_decode,
-            hash_pairs_array,
-            might_contain,
+        from .bloom import BLOOM_BROADCAST_CAP, BLOOM_NARROW_BYTES, bloom_decode
+
+        dom = _probe_domain(tf.dataType, bf.dataType) if ranged else None
+        rngs = [self._probe_range(e, dom) for e in entries]
+        blooms = (
+            self._bloom_for_entries(entries) if bloomed else [None] * len(entries)
         )
-
-        # canonical values sort like the column for integral, string and
-        # date keys, when batch and table share the domain (a timestamp
-        # batch against date stats would not); timestamps carry no
-        # footer key stats, float keys can be NaN
-        domains = {
-            "date" if isinstance(f.dataType, DateType) else _type_class(f.dataType)
-            for f in (tf, bf)
-        }
-        ranged = ranged and len(domains) == 1 and domains <= {
-            "integral", "string", "date"
-        }
-        blooms = self._bloom_for_entries(entries) if bloomed else []
-        if sum(b["m"] // 8 for b in blooms if b is not None) > BLOOM_BROADCAST_CAP:
-            blooms = []
-        covered = sum(b is not None for b in blooms)
+        if dom and sum(b["m"] // 8 for b in blooms if b) > BLOOM_NARROW_BYTES:
+            lo, hi = keys.agg(F.min(self.key), F.max(self.key)).first()
+            if lo is None:
+                return []
+            lo, hi = _probe_value(dom, lo), _probe_value(dom, hi)
+            # a NaN bound compares False both ways: every file stays
+            keep = [
+                i
+                for i, r in enumerate(rngs)
+                if r is None or not (hi < r[0] or lo > r[1])
+            ]
+            entries, rngs, blooms = (
+                [xs[i] for i in keep] for xs in (entries, rngs, blooms)
+            )
+        room = BLOOM_BROADCAST_CAP
+        for i, b in enumerate(blooms):
+            if b is not None:
+                if b["m"] // 8 > room:
+                    blooms[i] = None
+                else:
+                    room -= b["m"] // 8
         # after a metadata-only resize_buckets the live set can mix
         # moduli, and a key's bucket differs per modulus: one bucket
         # column per DISTINCT modulus (normally exactly one)
         moduli = sorted({self._entry_modulus(e, n) for e in entries}) if n else []
-        specs = []
+        fid, rpos, los, his, mod, blo, bhi, decoded = ([] for _ in range(8))
         for i, e in enumerate(entries):
-            stats = e.get("stats", {})
-            rng = stats.get(self.key) if ranged else None
-            if rng is not None and None in rng:
-                rng = None
-            bst = stats.get(BUCKET_COL) if n else None
-            bucket = (
-                (moduli.index(self._entry_modulus(e, n)), int(bst[0]), int(bst[1]))
-                if bst and bst[0] is not None
-                else None
-            )
-            bloom = blooms[i] if blooms else None
-            if rng is not None or bucket is not None or bloom is not None:
-                specs.append((i, rng, bucket, bloom and bloom_decode(bloom)))
-        if not specs:
+            bst = e.get("stats", {}).get(BUCKET_COL) if n else None
+            if bst and bst[0] is None:
+                bst = None
+            if rngs[i] is None and not bst and blooms[i] is None:
+                continue
+            s = len(fid)
+            fid.append(i)
+            if rngs[i] is not None:
+                rpos.append(s)
+                los.append(rngs[i][0])
+                his.append(rngs[i][1])
+            mod.append(moduli.index(self._entry_modulus(e, n)) if bst else -1)
+            blo.append(int(bst[0]) if bst else 0)
+            bhi.append(int(bst[1]) if bst else 0)
+            if blooms[i] is not None:
+                decoded.append((s, bloom_decode(blooms[i])))
+        if not fid:
             return entries
-        bc = self.spark.sparkContext.broadcast(specs)
-        sort_keys = any(s[1] is not None for s in specs)
+        dtype = _PROBE_TYPES[dom][0] if dom else object
+        spec = {
+            "domain": dom,
+            "fid": np.array(fid, dtype=np.int64),
+            "rpos": np.array(rpos, dtype=np.int64),
+            "lo": np.array(los, dtype=dtype),
+            "hi": np.array(his, dtype=dtype),
+            "mod": np.array(mod, dtype=np.int64),
+            "blo": np.array(blo, dtype=np.int64),
+            "bhi": np.array(bhi, dtype=np.int64),
+            "blooms": decoded,
+        }
+        bc = self.spark.sparkContext.broadcast(spec)
 
         def probe(batches):
-            import bisect
-
             import numpy as np
             import pyarrow as pa
 
-            hits: set[int] = set()
-            seen: set[tuple[int, int]] = set()
+            spec = bc.value
+            hit = np.zeros(len(spec["fid"]), dtype=bool)
+            seen = [np.empty(0, dtype=np.int64) for _ in moduli]
             for b in batches:
-                raw = b.column(0).to_pylist()
-                live = [i for i, v in enumerate(raw) if v is not None]
-                if not live:
-                    continue
-                vals = [_jsonable(raw[i]) for i in live]
-                bids = [
-                    b.column(j + 1).to_numpy(zero_copy_only=False)[live]
-                    for j in range(len(moduli))
-                ]
-                if sort_keys:
-                    order = sorted(range(len(vals)), key=vals.__getitem__)
-                    vals = [vals[i] for i in order]
-                    bids = [a[order] for a in bids]
-                for j, a in enumerate(bids):
-                    seen.update((j, int(x)) for x in np.unique(a))
-                if covered:
-                    h1, h2 = hash_pairs_array(vals)
-                for fid, rng, bucket, bloom in bc.value:
-                    if fid in hits:
-                        continue
-                    lo, hi = 0, len(vals)
-                    if rng is not None:
-                        lo = bisect.bisect_left(vals, rng[0])
-                        hi = bisect.bisect_right(vals, rng[1])
-                        if lo >= hi:
-                            continue
-                    ok = np.ones(hi - lo, dtype=bool)
-                    if bucket is not None:
-                        a = bids[bucket[0]][lo:hi]
-                        ok &= (a >= bucket[1]) & (a <= bucket[2])
-                    if bloom is not None:
-                        ok &= might_contain(bloom, h1[lo:hi], h2[lo:hi])
-                    if ok.any():
-                        hits.add(fid)
-            out = [(f, None, None) for f in hits] + [(None, *p) for p in seen]
+                ok, ids = _key_probe_batch(spec, b, hit)
+                hit |= ok
+                seen = [np.union1d(a, u) for a, u in zip(seen, ids)]
+            out = [(int(f), None, None) for f in spec["fid"][hit]] + [
+                (None, j, int(x)) for j, a in enumerate(seen) for x in a
+            ]
             if out:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(c, pa.int32()) for c in zip(*out)],
@@ -4233,12 +4228,12 @@ class Table:
             .collect()
         )
         hit = {r["_f"] for r in rows}
-        tested = {s[0] for s in specs}
+        tested = set(fid)
         kept = [e for i, e in enumerate(entries) if i not in tested or i in hit]
-        if covered:
+        if decoded:
             self._last_bloom_prune = {
                 "candidates": len(entries),
-                "covered": covered,
+                "covered": len(decoded),
                 "kept": len(kept),
             }
         if n:
@@ -4249,6 +4244,15 @@ class Table:
                 "moduli": moduli,
             }
         return kept
+
+    def _probe_range(self, e: dict, dom: str | None):
+        """A file's key [min, max] in the probe domain ``dom``, or None
+        (no domain, no stats, or NaN stats)."""
+        r = e.get("stats", {}).get(self.key) if dom else None
+        if r is None or None in r:
+            return None
+        lo, hi = _probe_value(dom, r[0]), _probe_value(dom, r[1])
+        return None if lo != lo or hi != hi else (lo, hi)
 
     # -- bloom file index (Hudi hoodie.index.type=BLOOM analog) ---------
 
@@ -5144,6 +5148,125 @@ def _jsonable(v):
     return v
 
 
+# numpy dtype (driver-side stats) and Arrow type (executor-side keys) of
+# each key-probe range domain
+_PROBE_TYPES = {
+    "integral": ("int64", "int64"),
+    "fractional": ("float64", "float64"),
+    "date": ("datetime64[D]", "date32"),
+    "string": (object, "string"),
+}
+
+
+def _probe_domain(table_type, batch_type) -> str | None:
+    """The domain :meth:`Table._key_probe` compares keys and footer key
+    stats in, or None (no range test): both sides integral, fractional,
+    string or date. Timestamps carry no footer key stats; a timestamp
+    batch against a date key has no common order with the stats."""
+    from pyspark.sql.types import DateType
+
+    doms = {
+        "date" if isinstance(t, DateType) else _type_class(t)
+        for t in (table_type, batch_type)
+    }
+    dom = doms.pop() if len(doms) == 1 else None
+    return dom if dom in _PROBE_TYPES else None
+
+
+def _probe_value(dom: str, v):
+    """One footer stat or batch key (driver side) in the probe domain.
+    Decimal stats are floats (:func:`_jsonable`); rounding to float
+    keeps ``<=`` order, so a range test never drops a holding file."""
+    import numpy as np
+
+    if dom == "integral":
+        return int(v)
+    if dom == "fractional":
+        return float(v)
+    if dom == "date":
+        return np.datetime64(_jsonable(v), "D")
+    return str(v)
+
+
+def _key_probe_batch(spec: dict, batch, done):
+    """One Arrow batch of :meth:`Table._key_probe`. Column 0 holds the
+    batch keys, column ``1 + j`` their bucket ids under the j-th
+    modulus. Returns a bool array over the spec's files (which ones at
+    least one key passes every test of; files already ``done`` skip
+    their bloom test) and the bucket ids seen per modulus.
+
+    Vectorized over files: the keys sort once, each file's key range
+    becomes a slice [start, end) of them through one ``searchsorted``,
+    and the bucket test searches the sorted ``bucket * K + position``
+    codes for [blo * K + start, bhi * K + end) — exact for a one-bucket
+    file, a superset for a file spanning buckets. Only bloom-covered
+    files that pass both loop in Python: each filter is its own bit
+    array. A NaN key drops this batch's range tests (NaN does not
+    sort)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from .bloom import hash_pairs_array, might_contain
+
+    col = batch.column(0)
+    valid = col.is_valid()
+    keys = col.filter(valid)
+    bids = [
+        batch.column(j + 1).filter(valid).to_numpy(zero_copy_only=False)
+        for j in range(batch.num_columns - 1)
+    ]
+    k = len(keys)
+    ok = np.zeros(len(spec["fid"]), dtype=bool)
+    if k == 0:
+        return ok, bids
+    start = np.zeros(len(ok), dtype=np.int64)
+    end = np.full(len(ok), k, dtype=np.int64)
+    order = None
+    dom = spec["domain"]
+    if dom is not None and len(spec["rpos"]):
+        v = pc.cast(keys, _PROBE_TYPES[dom][1], safe=False).to_numpy(
+            zero_copy_only=False
+        )
+        if dom != "fractional" or not np.isnan(v).any():
+            order = np.argsort(v, kind="stable")
+            v = v[order]
+            bids = [b[order] for b in bids]
+            start[spec["rpos"]] = np.searchsorted(v, spec["lo"], "left")
+            end[spec["rpos"]] = np.searchsorted(v, spec["hi"], "right")
+    ok = start < end
+    for j, b in enumerate(bids):
+        m = spec["mod"] == j
+        codes = np.sort(b.astype(np.int64) * k + np.arange(k))
+        first = np.searchsorted(codes, spec["blo"][m] * k + start[m], "left")
+        ok[m] &= np.searchsorted(codes, spec["bhi"][m] * k + end[m], "left") > first
+    if spec["blooms"]:
+        vals = keys.to_pylist()
+        if order is not None:
+            vals = [vals[i] for i in order]
+        h1, h2 = hash_pairs_array(vals)
+        for s, bloom in spec["blooms"]:
+            if ok[s] and not done[s]:
+                a, z = start[s], end[s]
+                ok[s] = might_contain(bloom, h1[a:z], h2[a:z]).any()
+    return ok, [np.unique(b) for b in bids]
+
+
+def _stat_bounds(s) -> tuple:
+    """(min, max) of one row-group column's footer statistics. pyarrow
+    cannot convert decimal statistics stored as INT32/INT64 — Spark's
+    layout for precision ≤ 18 — so those scale the raw integers."""
+    if s.logical_type.type == "DECIMAL" and s.physical_type in ("INT32", "INT64"):
+        import json
+        from decimal import Decimal
+
+        scale = json.loads(s.logical_type.to_json())["scale"]
+        return (
+            Decimal(s.min_raw).scaleb(-scale),
+            Decimal(s.max_raw).scaleb(-scale),
+        )
+    return s.min, s.max
+
+
 def _footer_stats(path: str, cols: list[str]) -> dict:
     """Row count + min/max for ``cols`` from one Parquet footer.
 
@@ -5168,8 +5291,9 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
             if s is None or not s.has_min_max:
                 ok = False
                 break
-            lo = s.min if lo is None else min(lo, s.min)
-            hi = s.max if hi is None else max(hi, s.max)
+            smin, smax = _stat_bounds(s)
+            lo = smin if lo is None else min(lo, smin)
+            hi = smax if hi is None else max(hi, smax)
         if ok and lo is not None:
             stats[col] = [_jsonable(lo), _jsonable(hi)]
     return {"rows": md.num_rows, "stats": stats}

@@ -183,6 +183,65 @@ def test_bloom_upsert_correct_under_many_random_batches(spark, tpath):
     assert got == expect
 
 
+def test_bloom_filters_past_broadcast_cap_still_prune(spark, tpath, monkeypatch):
+    """Past BLOOM_BROADCAST_CAP the probe ships the filters that fit;
+    the other files keep only their other tests, never a dropped file."""
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark import (
+        bloom,
+    )
+
+    t = Table.create(spark, tpath, key="k", precombine="v", index_type="bloom")
+    t.bulk_insert(_interleaved(spark, nfiles=8))
+    entries = t.current_files()
+    sizes = [b["m"] // 8 for b in t._bloom_for_entries(entries)]
+    monkeypatch.setattr(bloom, "BLOOM_BROADCAST_CAP", sum(sizes[:3]))
+    keys = spark.createDataFrame([(5,), (9999,), (4242,)], "k long")
+    kept = t._key_probe(entries, keys)
+    assert t._last_bloom_prune["covered"] == 3
+    assert len(kept) < len(entries)
+    assert all(e in kept for e in t._touched(entries, keys))
+
+
+def test_bloom_many_filters_narrow_by_key_envelope_first(
+    spark, tpath, monkeypatch
+):
+    """Past BLOOM_NARROW_BYTES of filters on a table with key ranges
+    (time-ordered keys), the probe takes the batch's key envelope first:
+    only the files it overlaps stay candidates and ship their filters,
+    and the kept set is the one the single-pass probe finds."""
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark import (
+        bloom,
+    )
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        PRUNE_MIN_FILES,
+    )
+
+    n = PRUNE_MIN_FILES + 4
+    t = Table.create(
+        spark,
+        tpath,
+        key="k",
+        precombine="v",
+        index_type="bloom",
+        max_records_per_file=50,
+    )
+    t.bulk_insert(
+        spark.range(0, 50 * n)
+        .select(F.col("id").alias("k"), F.col("id").alias("v"))
+        .coalesce(1)
+    )
+    entries = t.current_files()
+    assert len(entries) == n
+    keys = spark.createDataFrame([(160,), (171,), (199,)], "k long")
+    one_pass = t._key_probe(entries, keys)
+    assert t._last_bloom_prune["covered"] == n
+    monkeypatch.setattr(bloom, "BLOOM_NARROW_BYTES", 0)
+    assert t._key_probe(entries, keys) == one_pass
+    assert t._last_bloom_prune["candidates"] == 1
+    assert t._last_bloom_prune["covered"] == 1
+    assert [e["stats"]["k"] for e in one_pass] == [[150, 199]]
+
+
 def test_bloom_point_lookup_read_prunes_files(spark, tpath):
     t = Table.create(spark, tpath, key="k", precombine="v", index_type="bloom")
     t.bulk_insert(_interleaved(spark, nfiles=8))

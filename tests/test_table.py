@@ -968,6 +968,99 @@ def test_temporal_key_upsert_past_range_gate(spark, tpath, key_type):
     ]
 
 
+@pytest.mark.parametrize("key_type", ["double", "decimal(10,2)"])
+def test_fractional_key_probe_keeps_range_test(spark, tpath, key_type):
+    """Fractional keys keep their per-key range test past PRUNE_MIN_FILES
+    (decimal stats are floats, and rounding keeps their order). A NaN
+    key does not sort: a batch holding one keeps every file."""
+    from decimal import Decimal
+
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        PRUNE_MIN_FILES,
+    )
+
+    n = PRUNE_MIN_FILES + 4
+    scale = Decimal if key_type != "double" else float
+    vals = [scale(i) / 4 for i in range(n)]
+    t = _one_key_per_file(spark, tpath, key_type, vals)
+    entries = t.current_files()
+    assert len(entries) == n
+    ends = spark.createDataFrame([(vals[0],), (vals[-1],)], f"k {key_type}")
+    assert len(t._prune_by_keys(entries, ends)) == 2
+    if key_type == "double":
+        nan = spark.createDataFrame([(vals[2],), (float("nan"),)], "k double")
+        assert t._prune_by_keys(entries, nan) == entries
+    t.upsert(spark.createDataFrame([(vals[3], 2)], f"k {key_type}, ver long"))
+    assert rows_of(t.snapshot(), "k", "ver") == [
+        (v, 2 if v == vals[3] else 1) for v in vals
+    ]
+
+
+def test_key_probe_batch_matches_per_key_tests():
+    """The vectorized probe kernel keeps exactly the files one key passes
+    every range and bucket test of (a file spanning two buckets may be
+    kept spuriously, never dropped), on random specs and batches with
+    null keys, and reports every bucket id it saw."""
+    import random
+
+    import numpy as np
+    import pyarrow as pa
+
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        _key_probe_batch,
+    )
+
+    rng = random.Random(3)
+    for _ in range(200):
+        mods = [rng.choice([4, 8]) for _ in range(rng.randint(0, 2))]
+        keys = [
+            rng.randint(0, 100) if rng.random() > 0.1 else None
+            for _ in range(rng.randint(0, 40))
+        ]
+        bcols = [
+            [None if k is None else (k * 7 + j) % m for k in keys]
+            for j, m in enumerate(mods)
+        ]
+        files = []
+        for _ in range(rng.randint(1, 30)):
+            lo = rng.randint(0, 100)
+            r = (lo, lo + rng.randint(0, 30)) if rng.random() < 0.7 else None
+            b = None
+            if mods and rng.random() < 0.7:
+                j = rng.randrange(len(mods))
+                blo = rng.randrange(mods[j])
+                b = (j, blo, blo + (rng.random() < 0.3))
+            files.append((r, b))
+        rpos = [i for i, (r, _) in enumerate(files) if r]
+        spec = {
+            "domain": "integral",
+            "fid": np.arange(len(files)),
+            "rpos": np.array(rpos, dtype=np.int64),
+            "lo": np.array([files[i][0][0] for i in rpos], dtype=np.int64),
+            "hi": np.array([files[i][0][1] for i in rpos], dtype=np.int64),
+            "mod": np.array([b[0] if b else -1 for _, b in files]),
+            "blo": np.array([b[1] if b else 0 for _, b in files]),
+            "bhi": np.array([b[2] if b else 0 for _, b in files]),
+            "blooms": [],
+        }
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(keys, pa.int64())] + [pa.array(c, pa.int32()) for c in bcols],
+            names=["k"] + [f"b{j}" for j in range(len(mods))],
+        )
+        ok, seen = _key_probe_batch(spec, batch, np.zeros(len(files), bool))
+        for i, (r, b) in enumerate(files):
+            exact = any(
+                k is not None
+                and (r is None or r[0] <= k <= r[1])
+                and (b is None or b[1] <= bcols[b[0]][x] <= b[2])
+                for x, k in enumerate(keys)
+            )
+            spans = b is not None and b[1] < b[2]
+            assert ok[i] == exact or (spans and ok[i])
+        for j, c in enumerate(bcols):
+            assert seen[j].tolist() == sorted({x for x in c if x is not None})
+
+
 def test_record_index_stale_is_safe(spark, tpath):
     """Files committed after the index build are uncovered: they fall
     back to range stats, so a stale index can never lose an update."""
