@@ -73,6 +73,17 @@ class LocalFS:
         except OSError:
             return None
 
+    def status(self, path: str) -> tuple[int, int] | None:
+        """(bytes, mtime in epoch ms) — the two fields a Hadoop
+        ``FileStatus`` of a data file carries — or None when
+        unstat-able. Milliseconds are floored from nanoseconds, as
+        Hadoop's local file system reports them."""
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        return st.st_size, st.st_mtime_ns // 1_000_000
+
     def delete(self, path: str) -> None:
         if os.path.exists(path):
             os.remove(path)
@@ -194,6 +205,16 @@ class S3FS:
             ]
         except Exception:
             return None
+
+    def status(self, path: str) -> tuple[int, int] | None:
+        """(bytes, LastModified in epoch ms) from one head_object, or
+        None."""
+        b, k = self._split(path)
+        try:
+            head = self.client.head_object(Bucket=b, Key=k)
+        except Exception:
+            return None
+        return head["ContentLength"], int(head["LastModified"].timestamp() * 1000)
 
     def delete(self, path: str) -> None:
         b, k = self._split(path)

@@ -48,7 +48,9 @@ import posixpath
 import re
 from datetime import datetime, timezone
 from typing import Any, Callable, Sequence
+from urllib.parse import unquote, urlparse
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -57,7 +59,7 @@ from .sqltext import IDENT as _SQL_IDENT
 from .sqltext import rewrite_ident as _rewrite_ident
 from .sqltext import scan_top as _scan_top
 from .sqltext import split_top as _split_top
-from .storage import create_json, fs_for, read_json, write_json
+from .storage import LocalFS, create_json, fs_for, read_json, write_json
 
 META_COL = "_commit_time"
 
@@ -197,6 +199,81 @@ def _validate_validators(v: dict) -> dict:
 def _norm_file_path(col):
     """Normalize Spark's _metadata.file_path URI to a plain path."""
     return F.regexp_replace(col, "^file:/+", "/")
+
+
+def _manifest_scan(
+    spark: SparkSession,
+    files: list[tuple[str, int, int]],
+    base: str | None,
+    schema: StructType | None,
+) -> DataFrame:
+    """A batch parquet scan of exactly ``files`` — ``(path, bytes,
+    mtime in epoch ms)`` from manifest entries — with the manifest as
+    its file index. It takes the steps ``spark.read.parquet`` takes
+    (``DataSource.resolveRelation``: ``InMemoryFileIndex`` →
+    ``HadoopFsRelation`` → ``baseRelationToDataFrame``), except that the
+    index's ``FileStatusCache`` is seeded with one ``FileStatus`` per
+    file, so building the frame lists and stats nothing. The reader
+    would list every path again, and past 32 paths
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) it does
+    so with a Spark job of one task per file.
+
+    The relation is the reader's: ``basePath`` partition discovery
+    typed by ``schema``, the data schema made nullable (bootstrapped
+    files lack the meta column), data columns then partition columns,
+    and ``inputFiles()`` / ``_metadata`` naming the same qualified paths
+    (``file:///...``), sizes and times. The cache is private to the
+    scan: a miss would stat that one file, never list a directory, so
+    it can never widen the scan to dead files."""
+    js = spark._jsparkSession
+    gateway = spark.sparkContext._gateway
+
+    def jclass(name: str) -> JavaClass:
+        # built from its name, a class costs no round trip to the JVM;
+        # ``spark._jvm.org.apache...`` costs one per name segment
+        return JavaClass(name, gateway._gateway_client)
+
+    ds = "org.apache.spark.sql.execution.datasources."
+    path_cls = jclass("org.apache.hadoop.fs.Path")
+    status_cls = jclass("org.apache.hadoop.fs.FileStatus")
+    utils = jclass("org.apache.spark.api.python.PythonUtils")
+    opts = utils.toScalaMap({} if base is None else {"basePath": base})
+    # no size bound and no TTL: an evicted status would cost a stat
+    cache = jclass(ds + "SharedInMemoryCache")(2**62, 0).createForNewClient()
+    roots = []
+    for path, size, mtime in files:
+        if not urlparse(path).scheme:
+            path = "file://" + os.path.abspath(path)
+        p = path_cls(path)
+        leaf = gateway.new_array(status_cls, 1)
+        # block size only matters for block locations, which a plain
+        # FileStatus has none of; splits come from maxPartitionBytes
+        leaf[0] = status_cls(size, False, 1, 32 << 20, mtime, p)
+        cache.putLeafFiles(p, leaf)
+        roots.append(p)
+    none = jclass("scala.Option").empty()
+    user_schema = (
+        none if schema is None
+        else jclass("scala.Some")(js.parseDataType(schema.json()))
+    )
+    index = jclass(ds + "InMemoryFileIndex")(
+        js, utils.toSeq(roots), opts, user_schema, cache, none, none
+    )
+    parts = index.partitionSchema()
+    fmt = jclass(ds + "parquet.ParquetFileFormat")()
+    if schema is None:
+        data = fmt.inferSchema(js, opts, index.allFiles()).get()
+    else:
+        pnames = {n.lower() for n in parts.fieldNames()}
+        data = js.parseDataType(
+            StructType(
+                [f for f in schema.fields if f.name.lower() not in pnames]
+            ).json()
+        )
+    relation = jclass(ds + "HadoopFsRelation")(
+        index, parts, data.asNullable(), none, fmt, opts, js
+    )
+    return DataFrame(js.baseRelationToDataFrame(relation), spark)
 
 
 def _bootstrap_listing(src_fs, source_dir: str) -> list[str]:
@@ -1136,16 +1213,16 @@ class Table:
             ext = [e for e in entries if e.get("external")]
             managed = [e for e in entries if not e.get("external")]
             dfs = []
-            for group, base, abs_paths in (
-                (managed, posixpath.join(self.path, "data"), True),
-                (ext, None, False),
+            for group, base in (
+                (managed, posixpath.join(self.path, "data")),
+                (ext, None),
             ):
-                for paths, mapping in self._group_by_mapping(
-                    group, vmaps, abs_paths
+                for group_entries, mapping in self._group_by_mapping(
+                    group, vmaps
                 ):
                     dfs.append(
                         self._scan_entry_group(
-                            paths, base, schema, with_file, mapping
+                            group_entries, base, schema, with_file, mapping
                         )
                     )
             df = dfs[0]
@@ -1171,13 +1248,13 @@ class Table:
         # source's own hive dirs, and the missing meta column surfaces
         # as null for the coalesce below.
         ext = [e for e in entries if e.get("external")]
-        by_commit: dict[str, list[str]] = {}
+        by_commit: dict[str, list[dict]] = {}
         for e in entries:
             if e.get("external"):
                 continue
             rel = e["path"]  # data/<commit>/...
             commit_dir = "/".join(rel.split("/")[:2])
-            by_commit.setdefault(commit_dir, []).append(self._abs(rel))
+            by_commit.setdefault(commit_dir, []).append(e)
         out = None
         for commit_dir in sorted(by_commit):
             mapping = (
@@ -1193,11 +1270,9 @@ class Table:
             out = part if out is None else out.unionByName(part)
         bc = self.meta.get("bootstrap_commit")
         if ext:
-            for paths, mapping in self._group_by_mapping(
-                ext, vmaps, abs_paths=False
-            ):
+            for group_entries, mapping in self._group_by_mapping(ext, vmaps):
                 part = self._scan_entry_group(
-                    paths,
+                    group_entries,
                     self.meta.get("bootstrap_source"),
                     schema,
                     with_file,
@@ -1337,39 +1412,49 @@ class Table:
 
     def _scan_entry_group(
         self,
-        paths: list[str],
+        entries: list[dict],
         base: str | None,
         schema: StructType | None,
         with_file: bool,
         mapping: dict[str, str | None] | None,
     ) -> DataFrame:
-        """One pruned parquet scan over ``paths``. With a non-identity
-        ``mapping`` (files written before a rename) the scan schema uses
-        the PHYSICAL names and a projection aliases back to current
-        names — Catalyst pushes later filters through the aliases, so
-        pushdown/pruning are unchanged. Fields absent at the vintage
-        become typed nulls AFTER the scan (never read physically: a
-        re-added name must not resurrect old bytes)."""
+        """One pruned parquet scan over the files of ``entries``, built
+        from the manifest by :func:`_manifest_scan`: each entry's
+        ``size`` and ``mtime`` (recorded by the stats pass, see
+        :meth:`_collect_stats`) become the file's ``FileStatus``, so the
+        scan makes no storage call. An entry without them (manifests
+        written before they were recorded, files whose footer could not
+        be read) is stat'ed once through ``self.fs`` here.
+
+        With a non-identity ``mapping`` (files written before a rename)
+        the scan schema uses the PHYSICAL names and a projection aliases
+        back to current names — Catalyst pushes later filters through
+        the aliases, so pushdown/pruning are unchanged. Fields absent at
+        the vintage become typed nulls AFTER the scan (never read
+        physically: a re-added name must not resurrect old bytes)."""
         identity = mapping is None or all(
             mapping.get(f.name, f.name) == f.name for f in (schema.fields if schema else ())
         )
-        reader = self.spark.read
-        if base is not None:
-            reader = reader.option("basePath", base)
-        if schema is not None:
-            if identity:
-                reader = reader.schema(schema)
-            else:
-                phys, alias_cols = self._mapping_scan_parts(schema, mapping)
-                reader = reader.schema(phys)
-        df = reader.parquet(*paths)
+        scan_schema = schema
+        if not identity:
+            scan_schema, alias_cols = self._mapping_scan_parts(schema, mapping)
+        files = []
+        for e in entries:
+            path = e["path"] if e.get("external") else self._abs(e["path"])
+            status = (e.get("size"), e.get("mtime"))
+            if None in status:
+                status = self.fs.status(path)
+                if status is None:
+                    raise FileNotFoundError(f"live file {path} is missing")
+            files.append((path, *status))
+        df = _manifest_scan(self.spark, files, base, scan_schema)
         if with_file:
             # _metadata resolves on the scan relation, not through a
             # Union — attach per branch
             df = df.withColumn(
                 "_file", _norm_file_path(F.col("_metadata.file_path"))
             )
-        if schema is not None and not identity:
+        if not identity:
             cols = list(alias_cols)
             if with_file:
                 cols.append(F.col("_file"))
@@ -1380,27 +1465,23 @@ class Table:
         self,
         entries: list[dict],
         vmaps: dict[str, dict[str, str | None]] | None,
-        abs_paths: bool,
-    ) -> list[tuple[list[str], dict[str, str | None] | None]]:
+    ) -> list[tuple[list[dict], dict[str, str | None] | None]]:
         """Partition ``entries`` into scan groups sharing one physical-
         name mapping (exactly one group — today's single relation — for
         never-renamed tables; ≤ #renames + 1 groups after)."""
-        path = (lambda e: self._abs(e["path"])) if abs_paths else (
-            lambda e: e["path"]
-        )
         if not entries:
             return []
         if vmaps is None:
-            return [([path(e) for e in entries], None)]
-        by_sig: dict[tuple, tuple[dict[str, str | None] | None, list[str]]] = {}
+            return [(entries, None)]
+        by_sig: dict[tuple, tuple[dict[str, str | None] | None, list[dict]]] = {}
         for e in entries:
             v = self._entry_vintage(e)
             mp = vmaps.get(v) if v is not None else None
             sig = tuple(sorted(mp.items())) if mp is not None else ()
             if sig not in by_sig:
                 by_sig[sig] = (mp, [])
-            by_sig[sig][1].append(path(e))
-        return [(paths, mp) for mp, paths in by_sig.values()]
+            by_sig[sig][1].append(e)
+        return [(group, mp) for mp, group in by_sig.values()]
 
     def files_df(self, as_of: str | None = None) -> DataFrame:
         """The live file set as a DataFrame (Iceberg ``table.files`` /
@@ -4056,7 +4137,11 @@ class Table:
         base = self.path.rstrip("/") + "/"
         out = []
         for p in abs_paths:
-            norm = p
+            # _metadata.file_path is a URI: a partition value with a
+            # space or '%' is percent-encoded there, but not in the
+            # manifest's paths. Decode once; unquote, unlike Spark's
+            # url_decode, keeps '+' as it is.
+            norm = unquote(p)
             if norm.startswith("file:"):
                 norm = "/" + norm.split(":", 1)[1].lstrip("/")
             if not norm.startswith(base):
@@ -4711,6 +4796,13 @@ class Table:
         stats = self._collect_stats(
             files, writer.schema, stats_cols, bloom_key=bloom_key
         )
+        # a task whose partition held no rows still writes a file; it
+        # has no key stats, so it would stay a candidate of every keyed
+        # write until compaction — publish none
+        empty = {p for p in files if stats[p]["rows"] == 0}
+        for p in empty:
+            self.fs.delete(p)
+        files = [p for p in files if p not in empty]
         if bloom_key:
             # one sidecar per write DIRECTORY, beside (not inside) the
             # manifest: filters are ~KBs per file and would bloat every
@@ -4785,7 +4877,9 @@ class Table:
         imperative metadata work, the one legitimate RDD use). Footer
         reads never touch data pages, and distributing them removes the
         O(files) driver loop from the commit path: the driver only
-        assembles the manifest from the collected per-file rows.
+        assembles the manifest from the collected per-file rows. Each
+        file's ``size`` and ``mtime`` ride along (:func:`_footer_stats`),
+        so later scans build their file index from the manifest alone.
 
         ``bloom_key`` additionally builds a per-file bloom filter over
         that column in the SAME pass (one single-column read of a file
@@ -5268,7 +5362,10 @@ def _stat_bounds(s) -> tuple:
 
 
 def _footer_stats(path: str, cols: list[str]) -> dict:
-    """Row count + min/max for ``cols`` from one Parquet footer.
+    """Row count + min/max for ``cols`` from one Parquet footer, plus the
+    file's ``size`` (bytes) and ``mtime`` (epoch ms). With those two the
+    manifest entry is all a scan's file index needs
+    (:func:`_manifest_scan`), as a Delta AddFile is.
 
     Runs on executors (see ``Table._collect_stats``); metadata-only read.
     """
@@ -5296,7 +5393,11 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
             hi = smax if hi is None else max(hi, smax)
         if ok and lo is not None:
             stats[col] = [_jsonable(lo), _jsonable(hi)]
-    return {"rows": md.num_rows, "stats": stats}
+    out = {"rows": md.num_rows, "stats": stats}
+    status = LocalFS().status(path)
+    if status is not None:
+        out["size"], out["mtime"] = status
+    return out
 
 
 def _parse_partition_value(col: str, raw: str, schema: StructType):

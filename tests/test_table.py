@@ -3042,13 +3042,23 @@ JOB_BUDGETS = {
     "bloom_upsert": 11,
     "bucket_upsert": 13,
     "range_pruned_upsert": 10,
+    # a table of 48 live files, past the 32 paths at which Spark's
+    # parquet reader lists them with a Spark job of one task per path;
+    # counted after scans took their file index from the manifest
+    # (before, run alone: 3, 1 and 8 jobs; 53, 48 and 105 tasks)
+    "wide_snapshot_count": 2,
+    "wide_incremental": 0,
+    "wide_upsert": 6,
 }
 # Spark tasks of the key-probe rows, counted like their jobs (before,
-# run alone: 25, 32 and 28).
+# run alone: 25, 32 and 28), and of the wide-table rows.
 TASK_BUDGETS = {
     "bloom_upsert": 24,
     "bucket_upsert": 31,
     "range_pruned_upsert": 23,
+    "wide_snapshot_count": 5,
+    "wide_incremental": 0,
+    "wide_upsert": 25,
 }
 
 
@@ -3101,6 +3111,13 @@ def test_commit_job_budgets(spark, tmp_path):
     )
     ranged.bulk_insert(
         spark.range(0, 20).coalesce(1).selectExpr("id", "1L AS ver", "'v' AS val")
+    )
+    wide = Table.create(
+        spark, str(tmp_path / "wide"), key="id", precombine="ver",
+        max_records_per_file=1,
+    )
+    wide.bulk_insert(
+        spark.range(0, 48).coalesce(1).selectExpr("id", "1L AS ver", "'v' AS val")
     )
     upd = [("update", None, {"val": "s.val"})]
     ins = [("insert", None, None)]
@@ -3172,6 +3189,12 @@ def test_commit_job_budgets(spark, tmp_path):
         "range_pruned_upsert": lambda: ranged.upsert(
             rows((5, 2, "u"), (100, 1, "n"))
         ),
+        "wide_snapshot_count": lambda: wide.snapshot().count(),
+        "wide_incremental": lambda: wide.incremental(None),
+        # rewrites 40 of the 48 files
+        "wide_upsert": lambda: wide.upsert(
+            spark.range(0, 40).selectExpr("id", "2L AS ver", "'w' AS val")
+        ),
     }
     used = {name: _count_jobs(spark, name, fn) for name, fn in calls.items()}
     print("jobs, tasks per commit:", used)
@@ -3201,12 +3224,74 @@ def test_commit_job_budgets(spark, tmp_path):
         assert stats["kept"] < stats["candidates"], stats
     keys = spark.createDataFrame([(5,)], "id long")
     kept = ranged._prune_by_keys(ranged.current_files(), keys)
-    # the upsert also wrote an empty, stats-less file: kept untested
-    assert [e["stats"].get("id") for e in kept if e["rows"]] == [[5, 5]]
+    assert [e["stats"].get("id") for e in kept] == [[5, 5]]
     for t in (bloomed, bucketed, ranged):
         assert rows_of(t.snapshot().where("id IN (5, 100)"), "id", "val") == [
             (5, "u"), (100, "n")
         ]
+    assert rows_of(wide.snapshot().groupBy("val").count(), "val", "count") == [
+        ("v", 8), ("w", 40)
+    ]
+
+
+@pytest.mark.parametrize(
+    "op", ["upsert", "delete", "merge_into", "record_index_upsert"]
+)
+def test_keyed_write_on_partition_value_with_space_percent_plus(
+    spark, tmp_path, op
+):
+    """``_metadata.file_path`` percent-encodes a partition value's space
+    and '%'; the touched-file lookup and the index prune must decode it
+    once to find the manifest's path ('+' stays as it is), or the write
+    misses the file and the old row survives beside the new one."""
+    schema = "id long, ts long, state string"
+    t = Table.create(
+        spark, str(tmp_path / "t"), key="id", precombine="ts",
+        partition_fields=["state"],
+    )
+    states = ["New York", "a%b", "a+b", "Ohio"]
+    t.insert(spark.createDataFrame(
+        [(i, 1, s) for i, s in enumerate(states)], schema
+    ))
+    batch = spark.createDataFrame(
+        [(i, 2, s) for i, s in enumerate(states)], schema
+    )
+    expect = [(i, 2, s) for i, s in enumerate(states)]
+    if op == "upsert":
+        t.upsert(batch)
+    elif op == "delete":
+        t.delete(batch.select("id"))
+        expect = []
+    elif op == "merge_into":
+        t.merge_into(
+            batch, "t.id = s.id",
+            matched=[("update", None, {"ts": "s.ts"})],
+            not_matched=[("insert", None, None)],
+        )
+    else:
+        TableServices(t).build_record_index()
+        t.upsert(batch)
+    assert rows_of(t.snapshot(), "id", "ts", "state") == expect
+
+
+def test_cow_rewrite_publishes_no_empty_file(spark, tpath):
+    """A rewrite whose write task got no rows publishes no 0-row file:
+    such a file has no key stats, so it would stay a candidate of every
+    later keyed write until compaction."""
+    t = make_table(spark, tpath, max_records_per_file=1)
+    t.bulk_insert(
+        spark.range(0, 20).coalesce(1).selectExpr("id", "1L AS ver", "'v' AS val")
+    )
+    t.upsert(df_of(spark, [(5, 2, "u"), (100, 1, "n")]))
+    added = t._manifest(t.latest_commit())["files_added"]
+    assert sorted(e["rows"] for e in added) == [1, 1]
+    assert all(e["stats"].get("id") for e in added)
+    write_dir = os.path.join(t.path, *added[0]["path"].split("/")[:2])
+    assert len([f for f in os.listdir(write_dir) if f.endswith(".parquet")]) == 2
+    assert rows_of(t.snapshot(), "id", "val")[4:7] == [
+        (4, "v"), (5, "u"), (6, "v")
+    ]
+    assert t.snapshot().count() == 21
 
 
 def test_rewrite_family_cow_matches_mor(spark, tmp_path):
