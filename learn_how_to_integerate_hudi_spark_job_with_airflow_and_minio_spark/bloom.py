@@ -16,15 +16,21 @@ per-file range, so a small scattered update batch prunes to just the
 files that might actually hold a touched key (bounded false-positive
 rate; false positives only cost an extra file read, never correctness).
 
-Storage: one JSON sidecar PER COMMIT at
-``_index/bloom/<commit>.json`` mapping each data file written by that
-commit to its filter ``{"m": bits, "k": probes, "b64": bit array}``.
+Storage: one JSON sidecar PER WRITE ATTEMPT at
+``_index/bloom/<commit>-<uuid8>.json``, named by the token of the data
+directory it covers (:meth:`Table._bloom_sidecar_path` — an optimistic-
+concurrency loser can only write a sidecar for its own orphaned
+directory), mapping each data file written there to its filter
+``{"m": bits, "k": probes, "b64": bit array}``. Sidecars of earlier
+tables under the legacy per-commit name ``<commit>.json`` are still read
+(:meth:`Table._bloom_for_entries`), by the key probe and the backfill
+alike.
 The commit manifests stay lean (a filter is ~1.2 KB/1k keys — inlining
 it would bloat every timeline replay), and the sidecar scheme is
 staleness-safe by construction, like the record index's covered set
 (:meth:`Table._prune_by_record_index`): data files are immutable, each
-commit covers exactly its own files forever, and files from commits
-without a sidecar simply fall through unpruned until
+sidecar covers exactly its own directory's files forever, and files
+without a sidecar entry simply fall through unpruned until
 :meth:`TableServices.build_bloom_index` backfills them.
 
 Scale notes (100 TB): filters are built EXECUTOR-side in the same

@@ -1097,29 +1097,7 @@ class Table:
         MVCC snapshots — pure manifest replay + one join, no change log
         to maintain; the join shuffles only the two snapshots' key sets.
         """
-        new = self.snapshot(as_of=end)
-        if begin is None:
-            return new.withColumn("_change_type", F.lit("insert"))
-        old = self.snapshot(as_of=begin).select(
-            F.col(self.key).alias("_old_key"), F.col(META_COL).alias("_old_commit")
-        )
-        joined = new.join(old, new[self.key] == old["_old_key"], "full_outer")
-        change = (
-            F.when(F.col("_old_key").isNull(), F.lit("insert"))
-            .when(new[self.key].isNull(), F.lit("delete"))
-            .when(F.col(META_COL) != F.col("_old_commit"), F.lit("update"))
-        )
-        out_cols = [
-            F.coalesce(new[self.key], F.col("_old_key")).alias(self.key)
-            if c == self.key
-            else new[c].alias(c)
-            for c in new.columns
-        ]
-        return (
-            joined.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-            .select(*out_cols, "_change_type")
-        )
+        return self._cdc_diff(begin, end, before_images=False)
 
     def changes_full(self, begin: str | None, end: str | None = None) -> DataFrame:
         """CDC with BEFORE and AFTER images (the Hudi cdc query with
@@ -1133,24 +1111,30 @@ class Table:
         path (the before image comes from the old snapshot, which the
         manifest still serves until the cleaner retires it).
         """
+        return self._cdc_diff(begin, end, before_images=True)
+
+    def _cdc_diff(
+        self, begin: str | None, end: str | None, before_images: bool
+    ) -> DataFrame:
+        """The keyed full-outer diff behind :meth:`changes` and
+        :meth:`changes_full`; ``before_images`` carries each non-key
+        data column's value at ``begin`` as ``<col>_before``."""
         new = self.snapshot(as_of=end)
-        data_cols = [c for c in new.columns if c != META_COL]
+        before = (
+            [c for c in new.columns if c not in (META_COL, self.key)]
+            if before_images
+            else []
+        )
         if begin is None:
             out = new.withColumn("_change_type", F.lit("insert"))
-            for c in data_cols:
-                if c != self.key:
-                    out = out.withColumn(
-                        f"{c}_before", F.lit(None).cast(dict(new.dtypes)[c])
-                    )
+            types = dict(new.dtypes)
+            for c in before:
+                out = out.withColumn(f"{c}_before", F.lit(None).cast(types[c]))
             return out
         old = self.snapshot(as_of=begin).select(
             F.col(self.key).alias("_old_key"),
             F.col(META_COL).alias("_old_commit"),
-            *[
-                F.col(c).alias(f"{c}_before")
-                for c in data_cols
-                if c != self.key
-            ],
+            *[F.col(c).alias(f"{c}_before") for c in before],
         )
         joined = new.join(old, new[self.key] == old["_old_key"], "full_outer")
         change = (
@@ -1163,7 +1147,7 @@ class Table:
             if c == self.key
             else new[c].alias(c)
             for c in new.columns
-        ] + [F.col(f"{c}_before") for c in data_cols if c != self.key]
+        ] + [F.col(f"{c}_before") for c in before]
         return (
             joined.withColumn("_change_type", change)
             .where(F.col("_change_type").isNotNull())
@@ -1200,90 +1184,46 @@ class Table:
         # additionally group files by NAME VINTAGE (see _vintage_mapping):
         # a file written before a RENAME carries the old physical column
         # name, so its group scans under the old name and aliases back —
-        # identity-mapped groups take the plain fast path below.
+        # identity-mapped groups take the plain fast path.
+        #
+        # Scan groups differ only in their basePath. Unpartitioned
+        # managed files scan from the data/ root: one relation, one
+        # listing, for never-renamed tables. Hive-style layout puts
+        # partition columns in directory names
+        # (data/<commit>/col=val/part-*.parquet), and Spark's partition
+        # discovery needs a basePath from which every segment down to
+        # the files is col=val — the commit dir — so partitioned files
+        # scan per commit dir (bounded by the live commits; compaction
+        # collapses it to 1). Name vintages align with commit dirs, so
+        # renames add no branch there. External (bootstrapped) files
+        # live OUTSIDE the table root and scan as their own groups:
+        # without a basePath, or from the bootstrap source root when the
+        # source is partitioned (its own hive dirs carry the partition
+        # columns). Their missing meta column surfaces as null, which
+        # the coalesce below stamps with the bootstrap commit.
         vmaps = self._vintage_mappings(entries, schema, as_of)
-        if not (self.meta.get("partition_fields") or []):
-            # unpartitioned: one multi-path scan per name vintage (a
-            # single relation, single listing, for never-renamed tables)
-            # — no partition discovery needed. External (bootstrapped)
-            # files live OUTSIDE the table root, so they get their own
-            # relation without the basePath option; the explicit schema
-            # surfaces their missing meta column as null, which the
-            # coalesce below stamps with the bootstrap commit.
-            ext = [e for e in entries if e.get("external")]
-            managed = [e for e in entries if not e.get("external")]
-            dfs = []
-            for group, base in (
-                (managed, posixpath.join(self.path, "data")),
-                (ext, None),
-            ):
-                for group_entries, mapping in self._group_by_mapping(
-                    group, vmaps
-                ):
-                    dfs.append(
-                        self._scan_entry_group(
-                            group_entries, base, schema, with_file, mapping
-                        )
-                    )
-            df = dfs[0]
-            for extra in dfs[1:]:
-                df = df.unionByName(extra)
-            bc = self.meta.get("bootstrap_commit")
-            if ext and bc and schema is not None and META_COL in schema.fieldNames():
-                df = df.withColumn(
-                    META_COL, F.coalesce(F.col(META_COL), F.lit(bc))
-                )
-            return df
-        # Hive-style layout puts partition columns in directory names
-        # (data/<commit>/col=val/part-*.parquet). Spark's partition
-        # discovery needs a basePath from which every segment down to the
-        # files is col=val — the commit dir — so files are read per commit
-        # group and unioned. The union is bounded by the number of live
-        # commits (compaction collapses it to 1); each branch is still a
-        # plain pruned parquet scan with full filter pushdown. Name
-        # vintages align with commit dirs, so renames add NO extra
-        # branches here. External (bootstrapped) files of a PARTITIONED
-        # source (r13) scan as one extra group whose basePath is the
-        # bootstrap source root — their partition columns come from the
-        # source's own hive dirs, and the missing meta column surfaces
-        # as null for the coalesce below.
         ext = [e for e in entries if e.get("external")]
-        by_commit: dict[str, list[dict]] = {}
-        for e in entries:
-            if e.get("external"):
-                continue
-            rel = e["path"]  # data/<commit>/...
-            commit_dir = "/".join(rel.split("/")[:2])
-            by_commit.setdefault(commit_dir, []).append(e)
-        out = None
-        for commit_dir in sorted(by_commit):
-            mapping = (
-                vmaps.get(commit_dir.split("/")[1]) if vmaps else None
-            )
-            part = self._scan_entry_group(
-                by_commit[commit_dir],
-                self._abs(commit_dir),
-                schema,
-                with_file,
-                mapping,
-            )
-            out = part if out is None else out.unionByName(part)
-        bc = self.meta.get("bootstrap_commit")
-        if ext:
-            for group_entries, mapping in self._group_by_mapping(ext, vmaps):
+        managed = [e for e in entries if not e.get("external")]
+        if self.meta.get("partition_fields"):
+            by_commit: dict[str, list[dict]] = {}
+            for e in managed:
+                commit_dir = "/".join(e["path"].split("/")[:2])
+                by_commit.setdefault(commit_dir, []).append(e)
+            groups = [(self._abs(d), by_commit[d]) for d in sorted(by_commit)]
+            groups.append((self.meta.get("bootstrap_source"), ext))
+        else:
+            groups = [(posixpath.join(self.path, "data"), managed), (None, ext)]
+        df = None
+        for base, group in groups:
+            for group_entries, mapping in self._group_by_mapping(group, vmaps):
                 part = self._scan_entry_group(
-                    group_entries,
-                    self.meta.get("bootstrap_source"),
-                    schema,
-                    with_file,
-                    mapping,
+                    group_entries, base, schema, with_file, mapping
                 )
-                out = part if out is None else out.unionByName(part)
-            if bc and schema is not None and META_COL in schema.fieldNames():
-                out = out.withColumn(
-                    META_COL, F.coalesce(F.col(META_COL), F.lit(bc))
-                )
-        return out
+                df = part if df is None else df.unionByName(part)
+        bc = self.meta.get("bootstrap_commit")
+        if ext and bc and schema is not None and META_COL in schema.fieldNames():
+            df = df.withColumn(META_COL, F.coalesce(F.col(META_COL), F.lit(bc)))
+        return df
 
     # -- rename-aware scan plumbing (Iceberg-style field identity) ------
 
@@ -1295,22 +1235,17 @@ class Table:
         identity-by-name is synthesized from their schema (a column's
         original name IS its id). Same walk shape as :meth:`_schema`,
         with an archive fallback for deep-vintage lookups."""
-        for c in reversed(self.commits()):
+
+        def newest_first():
+            yield from ((c, self._manifest) for c in reversed(self.commits()))
+            # the archive opens only when no live manifest answered
+            arch = self._archived_manifests()
+            yield from ((c, arch.get) for c in sorted(arch, reverse=True))
+
+        for c, manifest in newest_first():
             if as_of is not None and c > as_of:
                 continue
-            m = self._manifest(c)
-            if m.get("schema"):
-                ids = m.get("field_ids")
-                if ids is not None:
-                    return dict(ids)
-                return {
-                    f["name"]: f["name"] for f in m["schema"]["fields"]
-                }
-        arch = self._archived_manifests()
-        for c in sorted(arch, reverse=True):
-            if as_of is not None and c > as_of:
-                continue
-            m = arch[c]
+            m = manifest(c)
             if m.get("schema"):
                 ids = m.get("field_ids")
                 if ids is not None:
@@ -2919,40 +2854,19 @@ class Table:
                     df = df.withColumn(c, F.lit(None).cast(by_type[c]))
             return df
 
-        def _matched_clause_index(is_m):
-            ci = F.when(~is_m, F.lit(-1))
-            for i, (_k, cond, _v) in enumerate(matched):
+        def _clause_index(scope, clauses):
+            # first-match-wins within one clause family over the rows in
+            # its scope (matched target rows, unmatched target rows for
+            # BY SOURCE, every unmatched source row for NOT MATCHED)
+            ci = F.when(~scope, F.lit(-1))
+            for i, (_k, cond, _v) in enumerate(clauses):
                 hit = (
-                    is_m
+                    scope
                     if cond is None
-                    else is_m & F.coalesce(F.expr(cond), F.lit(False))
+                    else scope & F.coalesce(F.expr(cond), F.lit(False))
                 )
                 ci = ci.when(hit, F.lit(i))
             return ci.otherwise(F.lit(-1))
-
-        def _by_source_clause_index(is_m):
-            # first-match-wins over UNMATCHED target rows (no source
-            # columns in scope — enforced in merge_into)
-            ci = F.when(is_m, F.lit(-1))
-            for i, (_k, cond, _v) in enumerate(not_matched_by_source):
-                hit = (
-                    ~is_m
-                    if cond is None
-                    else ~is_m & F.coalesce(F.expr(cond), F.lit(False))
-                )
-                ci = ci.when(hit, F.lit(i))
-            return ci.otherwise(F.lit(-1))
-
-        def _insert_clause_index():
-            ci = None
-            for i, (_k, cond, _v) in enumerate(not_matched):
-                hit = (
-                    F.lit(True)
-                    if cond is None
-                    else F.coalesce(F.expr(cond), F.lit(False))
-                )
-                ci = F.when(hit, F.lit(i)) if ci is None else ci.when(hit, F.lit(i))
-            return F.lit(-1) if ci is None else ci.otherwise(F.lit(-1))
 
         def _insert_values(i, values):
             if values is not None:
@@ -2965,9 +2879,9 @@ class Table:
             return {c: f"{sa}.{c}" for c in data_cols if c in source.columns}
 
         def _insert_rows(unmatched):
-            u = unmatched.withColumn("__mi_ci", _insert_clause_index()).where(
-                F.col("__mi_ci") >= 0
-            )
+            u = unmatched.withColumn(
+                "__mi_ci", _clause_index(F.lit(True), not_matched)
+            ).where(F.col("__mi_ci") >= 0)
             cols = []
             for c in data_cols:
                 expr = F.lit(None).cast(by_type[c])
@@ -2981,36 +2895,113 @@ class Table:
                 cols.append(expr.alias(c))
             return u.select(*cols)
 
-        def _assert_unique_match(pairs):
-            dup = (
-                pairs.groupBy("__mi_k")
-                .agg(F.count(F.lit(1)).alias("__mi_n"))
-                .where(F.col("__mi_n") > 1)
+        def _cardinality_violation():
+            return ValueError(
+                "MERGE INTO cardinality violation: a target row is "
+                "matched by more than one source row while a WHEN "
+                "MATCHED clause exists — dedup the source first"
             )
-            if not dup.isEmpty():
-                raise ValueError(
-                    "MERGE INTO cardinality violation: a target row is "
-                    "matched by more than one source row while a WHEN "
-                    "MATCHED clause exists — dedup the source first"
-                )
 
-        del_idx = [i for i, cl in enumerate(matched) if cl[0] == "delete"]
-        upd_idx = [i for i, cl in enumerate(matched) if cl[0] == "update"]
-        bs_del_idx = [
-            i for i, cl in enumerate(not_matched_by_source) if cl[0] == "delete"
+        families = [
+            (ci, clauses)
+            for ci, clauses in (
+                ("__mi_ci", matched), ("__mi_bi", not_matched_by_source)
+            )
+            if clauses
         ]
-        bs_upd_idx = [
-            i for i, cl in enumerate(not_matched_by_source) if cl[0] == "update"
-        ]
+        has_delete = any(
+            kind == "delete" for _ci, clauses in families for kind, *_ in clauses
+        )
+
+        def _resolve(target, cols, ins_keys, commit=None):
+            """The WHEN MATCHED and NOT MATCHED BY SOURCE clauses over the
+            target rows, for both table types: ``cols`` with the winning
+            clause's SETs applied (``_commit_time`` restamped to
+            ``commit`` on updated rows), plus ``__mi_del`` (a DELETE
+            clause claimed the row) and ``__mi_hit`` (any clause claimed
+            it). Rows whose key an insert of the same statement claims
+            drop out: a colliding insert replaces the stored row, on COW
+            and MOR alike."""
+            aff = _widen(target).alias(ta)
+            if matched:
+                # the cardinality gate guarantees <= 1 source match per
+                # target row, so the left join cannot fan out
+                j = aff.join(src, on_cond, "left")
+                is_m = F.col("__mi_m").isNotNull()
+            else:
+                # by-source-only statement: no gate ran (the contract
+                # allows multi-matched target rows when no MATCHED
+                # clause exists), so a left join would emit a matched
+                # row once PER matching source row and the carried
+                # copies would persist as duplicate keys. Only
+                # MEMBERSHIP matters here (no clause reads source
+                # columns) — tag it with semi/anti joins, which never
+                # multiply rows.
+                j = (
+                    aff.join(src, on_cond, "left_semi")
+                    .withColumn("__mi_m", F.lit(True))
+                    .unionByName(
+                        aff.join(src, on_cond, "left_anti").withColumn(
+                            "__mi_m", F.lit(False)
+                        )
+                    )
+                    .alias(ta)
+                )
+                is_m = F.col("__mi_m")
+            deleted, hit = F.lit(False), None
+            for ci, clauses in families:
+                scope = is_m if ci == "__mi_ci" else ~is_m
+                j = j.withColumn(ci, _clause_index(scope, clauses))
+                claims = F.col(ci) >= 0
+                hit = claims if hit is None else hit | claims
+                dels = [i for i, cl in enumerate(clauses) if cl[0] == "delete"]
+                if dels:
+                    deleted = deleted | F.col(ci).isin(dels)
+            out = []
+            for c in cols:
+                expr = F.col(f"{ta}.{c}")
+                for ci, clauses in families:
+                    for i, (kind, _cond, sets) in enumerate(clauses):
+                        if kind != "update":
+                            continue
+                        if c == META_COL:
+                            val = F.lit(commit)
+                        elif c in sets:
+                            val = F.expr(sets[c]).cast(by_type[c])
+                        else:
+                            continue
+                        expr = F.when(F.col(ci) == i, val).otherwise(expr)
+                out.append(expr.alias(c))
+            res = j.select(*out, deleted.alias("__mi_del"), hit.alias("__mi_hit"))
+            if ins_keys is not None:
+                res = res.join(ins_keys, self.key, "left_anti")
+            return res
+
+        def _colliding_keys(ins):
+            # When ON is not pure key equality (or INSERT VALUES computes
+            # a fresh key), an unmatched source row can insert a key the
+            # table ALREADY holds. The keyed snapshot can never carry
+            # duplicates, so such an insert REPLACES the stored row —
+            # the same resolution the MOR read-side merge applies; no
+            # clause of the statement may update or delete that key.
+            # None (no extra jobs) in the common shape: ON is key
+            # equality and every insert clause assigns the key from that
+            # same source column, so every insert key is absent from the
+            # target. No .distinct(): the LEFT ANTI and prune consumers
+            # are duplicate-tolerant.
+            if self._mi_inserts_collision_free(
+                on, self._mi_on_key_col(on, ta, sa), not_matched, ta, sa
+            ):
+                return None
+            return ins.select(self.key)
 
         if self.table_type == "mor":
             # The merged view (latest-per-key window over base+deltas)
-            # feeds the cardinality gate, every update clause, the
-            # delete-key projection, AND the not-matched anti-join —
-            # persist it once for the statement instead of re-running
-            # the window shuffle per consumer (measured 4.2 s → ~2 s at
-            # sf0.1). Released after merge() publishes, by which point
-            # every consumer has evaluated.
+            # feeds the cardinality gate, the clause resolution AND the
+            # not-matched anti-join — persist it once for the statement
+            # instead of re-running the window shuffle per consumer
+            # (measured 4.2 s → ~2 s at sf0.1). Released after merge()
+            # publishes, by which point every consumer has evaluated.
             from pyspark import StorageLevel
 
             snap_df = (
@@ -3019,97 +3010,36 @@ class Table:
             )
             try:
                 snap = snap_df.alias(ta)
-                j = snap.join(src, on_cond, "left")
-                is_m = F.col("__mi_m").isNotNull()
                 if matched:
-                    _assert_unique_match(
-                        j.where(is_m).select(F.col(f"{ta}.{self.key}").alias("__mi_k"))
+                    pairs = snap.join(src, on_cond, "inner").select(
+                        F.col(f"{ta}.{self.key}").alias("__mi_k")
                     )
-                j = j.withColumn("__mi_ci", _matched_clause_index(is_m))
-                if not_matched_by_source:
-                    j = j.withColumn("__mi_bi", _by_source_clause_index(is_m))
-                parts = []
-                for i in upd_idx:
-                    sets = matched[i][2]
-                    parts.append(
-                        j.where(F.col("__mi_ci") == i).select(
-                            *[
-                                (
-                                    F.expr(sets[c]).cast(by_type[c])
-                                    if c in sets
-                                    else F.col(f"{ta}.{c}")
-                                ).alias(c)
-                                for c in data_cols
-                            ]
-                        )
+                    dup = (
+                        pairs.groupBy("__mi_k")
+                        .agg(F.count(F.lit(1)).alias("__mi_n"))
+                        .where(F.col("__mi_n") > 1)
                     )
-                for i in bs_upd_idx:
-                    sets = not_matched_by_source[i][2]
-                    parts.append(
-                        j.where(F.col("__mi_bi") == i).select(
-                            *[
-                                (
-                                    F.expr(sets[c]).cast(by_type[c])
-                                    if c in sets
-                                    else F.col(f"{ta}.{c}")
-                                ).alias(c)
-                                for c in data_cols
-                            ]
-                        )
-                    )
-                ins_part = (
+                    if not dup.isEmpty():
+                        raise _cardinality_violation()
+                ins = (
                     _insert_rows(src.join(snap, on_cond, "left_anti"))
                     if not_matched
                     else None
                 )
-                del_parts = []
-                if del_idx:
-                    del_parts.append(
-                        j.where(F.col("__mi_ci").isin(del_idx)).select(
-                            F.col(f"{ta}.{self.key}").alias(self.key)
-                        )
-                    )
-                if bs_del_idx:
-                    del_parts.append(
-                        j.where(F.col("__mi_bi").isin(bs_del_idx)).select(
-                            F.col(f"{ta}.{self.key}").alias(self.key)
-                        )
-                    )
-                dels = None
-                for p in del_parts:
-                    dels = p if dels is None else dels.unionByName(p)
-                # Cross-type agreement: when ON is not pure key equality
-                # an unmatched source row can insert a key another clause
-                # of the SAME statement updates or deletes. COW resolves
-                # insert-wins (rewritten rows are anti-joined against the
-                # insert keys); without this, merge()'s _dedup_batch
-                # would resolve update-vs-insert by max precombine and
-                # the tombstone anti-join would let DELETE beat the
-                # insert. Drop update/tombstone rows whose key the insert
-                # set claims, so MOR lands the same state. Skipped (no
-                # extra jobs) when inserts are provably collision-free —
-                # then every insert key is absent from the target, and
-                # update/delete keys are by definition present.
-                if ins_part is not None and (parts or dels is not None):
-                    if not self._mi_inserts_collision_free(
-                        on, self._mi_on_key_col(on, ta, sa), not_matched,
-                        ta, sa,
-                    ):
-                        # no .distinct(): the LEFT ANTI consumers below
-                        # are duplicate-tolerant
-                        ins_keys = ins_part.select(self.key)
-                        parts = [
-                            p.join(ins_keys, self.key, "left_anti")
-                            for p in parts
-                        ]
-                        if dels is not None:
-                            dels = dels.join(ins_keys, self.key, "left_anti")
-                if ins_part is not None:
-                    parts.append(ins_part)
+                # the claimed rows (updated full rows and tombstones) and
+                # the inserts land as ONE delta commit through merge()
                 eff = None
-                for p in parts:
-                    eff = p if eff is None else eff.unionByName(p)
-                if eff is None and dels is None:
+                if families:
+                    ins_keys = _colliding_keys(ins) if ins is not None else None
+                    eff = (
+                        _resolve(snap_df, data_cols, ins_keys)
+                        .where("__mi_hit")
+                        .drop("__mi_hit")
+                    )
+                if ins is not None:
+                    ins = ins.withColumn("__mi_del", F.lit(False))
+                    eff = ins if eff is None else eff.unionByName(ins)
+                if eff is None:
                     commit = self._next_commit()
                     # an evolving statement widens the schema even when
                     # it changes no rows (Delta semantics) — record it
@@ -3118,15 +3048,6 @@ class Table:
                         table_schema if evolved else None,
                     )
                     return commit
-                if eff is None:
-                    # snap_df is already widened under schema evolution
-                    eff = snap_df.select(*data_cols).limit(0)
-                eff = eff.withColumn("__mi_del", F.lit(False))
-                if dels is not None:
-                    eff = eff.unionByName(
-                        dels.withColumn("__mi_del", F.lit(True)),
-                        allowMissingColumns=True,
-                    )
                 return self.merge(eff, delete_col="__mi_del")
             finally:
                 snap_df.unpersist()
@@ -3174,11 +3095,7 @@ class Table:
                 ),
             ).collect()[0]
             if row["mx"] is not None and row["mx"] > 1:
-                raise ValueError(
-                    "MERGE INTO cardinality violation: a target row is "
-                    "matched by more than one source row while a WHEN "
-                    "MATCHED clause exists — dedup the source first"
-                )
+                raise _cardinality_violation()
             files = set(self._to_rel(row["files"] or []))
             rewrite_entries = [e for e in candidates if e["path"] in files]
         if not_matched_by_source:
@@ -3219,24 +3136,12 @@ class Table:
                 .withColumn(META_COL, F.lit(commit))
                 .select(*table_cols)
             )
-            # Keyed-table semantics for colliding inserts: when ON is
-            # not pure key equality (or INSERT VALUES computes a fresh
-            # key), an unmatched source row can insert a key the table
-            # ALREADY holds. The keyed snapshot can never carry
-            # duplicates, so such an insert REPLACES the stored row —
-            # the same resolution the MOR read-side merge applies.
-            # Skipped (provably collision-free, no extra jobs) in the
-            # common shape: ON is key equality and every insert clause
-            # assigns the key from that same source column.
-            if not self._mi_inserts_collision_free(
-                on, on_key_col, not_matched, ta, sa
-            ):
-                # key multiset from the gated PRE-dedup frame (the
-                # _merge_write discipline): the anti-join/prune/semi-
-                # join consumers are duplicate-tolerant, and deriving
-                # from the deduped rows would replay the dedup groupBy
-                # per consumer
-                ins_keys = ins_src.select(self.key)
+            # Colliding inserts also retire the stored row from files
+            # outside the rewrite. Key multiset from the gated PRE-dedup
+            # frame (the _merge_write discipline): deriving it from the
+            # deduped rows would replay the dedup groupBy per consumer.
+            ins_keys = _colliding_keys(ins_src)
+            if ins_keys is not None:
                 rewritten = {e["path"] for e in rewrite_entries}
                 remaining = [e for e in entries if e["path"] not in rewritten]
                 coll = (
@@ -3255,75 +3160,10 @@ class Table:
                     coll_removed = [e["path"] for e in coll]
 
         def apply_clauses(rows: DataFrame) -> DataFrame:
-            aff = _widen(rows).alias(ta)
-            if matched:
-                # the cardinality gate above guarantees <= 1 source
-                # match per target row, so the left join cannot fan out
-                j = aff.join(src, on_cond, "left")
-                is_m = F.col("__mi_m").isNotNull()
-            else:
-                # by-source-only statement: no gate ran (the contract
-                # allows multi-matched target rows when no MATCHED
-                # clause exists), so a left join would emit a matched
-                # row once PER matching source row and the carried
-                # copies would persist as duplicate keys. Only
-                # MEMBERSHIP matters here (no clause reads source
-                # columns) — tag it with semi/anti joins, which never
-                # multiply rows.
-                j = (
-                    aff.join(src, on_cond, "left_semi")
-                    .withColumn("__mi_m", F.lit(True))
-                    .unionByName(
-                        aff.join(src, on_cond, "left_anti").withColumn(
-                            "__mi_m", F.lit(False)
-                        )
-                    )
-                    .alias(ta)
-                )
-                is_m = F.col("__mi_m")
-            j = j.withColumn("__mi_ci", _matched_clause_index(is_m))
-            if not_matched_by_source:
-                j = j.withColumn("__mi_bi", _by_source_clause_index(is_m))
-            keep = (
-                ~F.col("__mi_ci").isin(del_idx) if del_idx else F.lit(True)
-            )
-            if bs_del_idx:
-                keep = keep & ~F.col("__mi_bi").isin(bs_del_idx)
-            cols = []
-            for c in table_cols:
-                expr = F.col(f"{ta}.{c}")
-                for i in upd_idx:
-                    sets = matched[i][2]
-                    val = (
-                        F.lit(commit)
-                        if c == META_COL
-                        else (
-                            F.expr(sets[c]).cast(by_type[c])
-                            if c in sets
-                            else None
-                        )
-                    )
-                    if val is not None:
-                        expr = F.when(F.col("__mi_ci") == i, val).otherwise(expr)
-                for i in bs_upd_idx:
-                    sets = not_matched_by_source[i][2]
-                    val = (
-                        F.lit(commit)
-                        if c == META_COL
-                        else (
-                            F.expr(sets[c]).cast(by_type[c])
-                            if c in sets
-                            else None
-                        )
-                    )
-                    if val is not None:
-                        expr = F.when(F.col("__mi_bi") == i, val).otherwise(expr)
-                cols.append(expr.alias(c))
-            out = j.where(keep).select(*cols)
-            # a colliding insert replaces the rewritten row too
-            if ins_keys is not None:
-                out = out.join(ins_keys, self.key, "left_anti")
-            return out
+            out = _resolve(rows, table_cols, ins_keys, commit)
+            if has_delete:
+                out = out.where(~F.col("__mi_del"))
+            return out.select(*table_cols)
 
         return self._rewrite(
             commit, "merge", rewrite_entries, apply_clauses,
@@ -4363,18 +4203,14 @@ class Table:
         key types simply stay uncovered (range stats still apply)."""
         if self.meta.get("index_type") != "bloom":
             return None
-        field = next((f for f in schema.fields if f.name == self.key), None)
-        if field is None:
-            return None
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
+        return self.key if self._key_class(schema) in _INDEX_KEY_CLASSES else None
 
-        ok = (ByteType, ShortType, IntegerType, LongType, StringType)
-        return self.key if isinstance(field.dataType, ok) else None
+    def _key_class(self, schema: StructType) -> str | None:
+        """The record key's :func:`_type_class` in ``schema``, or None
+        when the schema lacks the key. The bloom and bucket indexes
+        take :data:`_INDEX_KEY_CLASSES` keys only."""
+        field = next((f for f in schema.fields if f.name == self.key), None)
+        return None if field is None else _type_class(field.dataType)
 
     def _bloom_for_entries(
         self, entries: list[dict]
@@ -4447,21 +4283,12 @@ class Table:
         error for a bucket table (unlike bloom's silent fall-through:
         the bucket layout IS the table's merge strategy, silently
         disabling it would turn every upsert into a full-range scan)."""
-        field = next((f for f in schema.fields if f.name == self.key), None)
-        if field is None:
+        cls = self._key_class(schema)
+        if cls is None:
             return None
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
-
-        if isinstance(
-            field.dataType, (ByteType, ShortType, IntegerType, LongType)
-        ):
+        if cls == "integral":
             return F.col(self.key).cast("long")
-        if isinstance(field.dataType, StringType):
+        if cls == "string":
             return F.col(self.key)
         raise ValueError(
             f"bucket index needs an integral/string record key; "
@@ -5196,6 +5023,11 @@ def _mrpf_override(t: "Table", target: int | None):
             t.meta.pop("max_records_per_file", None)
 
 
+# key type classes the bloom and bucket indexes take: their canonical
+# str() form agrees between the pyarrow build side and the Spark probe
+_INDEX_KEY_CLASSES = ("integral", "string")
+
+
 def _type_class(dt) -> str:
     """Coarse type class for write-side schema enforcement: drift WITHIN
     a class (int→long, decimal widening) is the normal evolution Spark
@@ -5657,11 +5489,12 @@ class TableServices:
 
         Enabling is a meta flag: every LATER commit builds its filters
         inline with the write's stats pass. The backfill here covers
-        files written BEFORE the flag: live files grouped by write
-        directory, filters built in one distributed pass per directory
-        with uncovered files (O(live data not yet covered), single key
+        files written BEFORE the flag: the live files no sidecar covers
+        get their filters from ONE pass of the write path's stats pass
+        (:meth:`_collect_stats` — driver-side for a handful of files,
+        distributed past that; O(live data not yet covered), single key
         column read — async service, the write path is never slowed
-        down). Inherently incremental AND self-repairing: coverage is
+        down), and each write directory's sidecar gains its new files. Inherently incremental AND self-repairing: coverage is
         tracked per FILE, so a re-run builds exactly the live files
         still missing from their sidecar — including files a previous
         run failed to read (a transient failure leaves the file out of
@@ -5677,70 +5510,51 @@ class TableServices:
                 "structural mode) — it cannot be converted to bloom"
             )
         # validate BEFORE persisting the flag: a rejected CREATE INDEX
-        # must not leave the table flagged as bloom-indexed (the check
-        # mirrors _bloom_write_key's supported-type set)
+        # must not leave the table flagged as bloom-indexed
         schema = t.effective_schema()
-        if schema is not None:
-            from pyspark.sql.types import (
-                ByteType,
-                IntegerType,
-                LongType,
-                ShortType,
+        if schema is not None and t._key_class(schema) not in _INDEX_KEY_CLASSES:
+            raise ValueError(
+                f"bloom index needs an integral/string record key; "
+                f"{t.key!r} is neither"
             )
-
-            field = next(
-                (f for f in schema.fields if f.name == t.key), None
-            )
-            ok = (ByteType, ShortType, IntegerType, LongType, StringType)
-            if field is None or not isinstance(field.dataType, ok):
-                raise ValueError(
-                    f"bloom index needs an integral/string record key; "
-                    f"{t.key!r} is neither"
-                )
         if t.meta.get("index_type") != "bloom":
             t.meta["index_type"] = "bloom"
             write_json(posixpath.join(t.path, "_table.json"), t.meta)
         if schema is None:
             return None
-        entries = t.current_files()
+        # coverage exactly as the key probe sees it (per-token sidecar or
+        # its legacy per-commit name), read fresh: another backfill may
+        # have appended since this handle cached a sidecar
+        t._bloom_sidecars.clear()
+        managed = [e for e in t.current_files() if e["path"].startswith("data/")]
+        have = t._bloom_for_entries(managed)
+        missing = [e["path"] for e, b in zip(managed, have) if b is None]
+        # one pass over every uncovered file, on the write path's
+        # driver-vs-distributed rule
+        built = t._collect_stats(
+            [t._abs(r) for r in missing], schema, [], bloom_key=t.key
+        )
+        blooms = {
+            r: st["bloom"] for r in missing if "bloom" in (st := built[t._abs(r)])
+        }
+        unreadable = set(missing) - set(blooms)
         by_token: dict[str, list[str]] = {}
-        for e in entries:
-            p = e["path"]
-            if not p.startswith("data/"):
-                continue  # external bootstrap file — stays uncovered
-            by_token.setdefault(p.split("/", 2)[1], []).append(p)
-        from .bloom import bloom_for_parquet_file
-
-        key = t.key
+        for e in managed:
+            by_token.setdefault(e["path"].split("/", 2)[1], []).append(e["path"])
         newest = None
         for token in sorted(by_token):
-            sp = t._bloom_sidecar_path(token)
-            have: dict[str, dict] = {}
-            if t.fs.exists(sp):
-                try:
-                    have = read_json(sp).get("files", {})
-                except Exception:
-                    have = {}
-            rels = [r for r in by_token[token] if r not in have]
-            if not rels:
-                newest = token.split("-", 1)[0]  # already fully covered
-                continue
-            abss = [t._abs(r) for r in rels]
-            sc = t.spark.sparkContext
-            nslices = max(1, min(len(abss), 256))
-            built = (
-                sc.parallelize(list(zip(rels, abss)), nslices)
-                .map(lambda ra: (ra[0], bloom_for_parquet_file(ra[1], key)))
-                .collect()
-            )
-            blooms = {r: b for r, b in built if b is not None}
-            if not blooms:
-                continue  # nothing built — leave the sidecar repairable
-            write_json(sp, {"files": {**have, **blooms}})
-            t._bloom_sidecars.pop(token, None)  # drop stale cache entry
-            if all(r in have or r in blooms for r in by_token[token]):
+            rels = by_token[token]
+            new = {r: blooms[r] for r in rels if r in blooms}
+            if new:
+                side = t._bloom_sidecars[token]["files"]
+                write_json(
+                    t._bloom_sidecar_path(token), {"files": {**side, **new}}
+                )
+                t._bloom_sidecars.pop(token, None)  # drop stale cache entry
+            if unreadable.isdisjoint(rels):
                 # "newest covered commit" means it: every live file of
                 # the token made it into the sidecar this run or before
+                # (a file whose read failed stays out, repairable)
                 newest = token.split("-", 1)[0]
         return newest
 

@@ -140,6 +140,21 @@ def test_bloom_backfill_repairs_partial_sidecar(spark, tpath):
     assert all(b is not None for b in blooms)
 
 
+def test_bloom_backfill_reads_legacy_sidecar(spark, tpath):
+    # a sidecar under the legacy per-commit name still covers its files:
+    # the backfill sees the coverage the key probe sees and builds nothing
+    t = Table.create(spark, tpath, key="k", precombine="v", index_type="bloom")
+    t.bulk_insert(_interleaved(spark, n=500, nfiles=4))
+    commit = t.commits()[0]
+    bdir = os.path.join(tpath, "_index", "bloom")
+    (name,) = os.listdir(bdir)
+    os.rename(os.path.join(bdir, name), os.path.join(bdir, f"{commit}.json"))
+    t2 = Table.load(spark, tpath)
+    assert all(b is not None for b in t2._bloom_for_entries(t2.current_files()))
+    assert TableServices(t2).build_bloom_index() == commit
+    assert os.listdir(bdir) == [f"{commit}.json"]
+
+
 def test_bloom_prunes_interleaved_merge_candidates(spark, tpath):
     t = Table.create(spark, tpath, key="k", precombine="v", index_type="bloom")
     t.bulk_insert(_interleaved(spark, nfiles=8))

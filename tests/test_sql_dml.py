@@ -111,11 +111,13 @@ def test_merge_into_insert_star_and_conditional_not_matched(spark, tpath):
     ]
 
 
-def test_merge_into_simultaneous_assignment(spark, tpath):
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_merge_into_simultaneous_assignment(spark, tpath, table_type):
     """SET a = t.b, b = t.a swaps — all right-hand sides see the OLD
     row (standard UPDATE semantics)."""
     t = Table.create(
-        spark, tpath, key="id", precombine="ver", table_name="t"
+        spark, tpath, key="id", precombine="ver", table_name="t",
+        table_type=table_type,
     )
     t.bulk_insert(
         spark.createDataFrame(
@@ -130,10 +132,14 @@ def test_merge_into_simultaneous_assignment(spark, tpath):
     assert (r.a, r.b) == (200.0, 100.0)
 
 
-def test_merge_into_unmatched_clause_row_carries_through(spark, tpath):
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_merge_into_unmatched_clause_row_carries_through(
+    spark, tpath, table_type
+):
     """A matched row no clause claims keeps its original commit stamp
-    (byte-identical rewrite), like update_where's non-matching rows."""
-    t = make(spark, tpath)
+    (byte-identical rewrite on COW, no delta row on MOR), like
+    update_where's non-matching rows."""
+    t = make(spark, tpath, table_type=table_type)
     before = {
         r.id: r._commit_time
         for r in t.snapshot().select("id", "_commit_time").collect()

@@ -3023,6 +3023,12 @@ JOB_BUDGETS = {
     "cow_merge_into_insert_collision": 12,
     "mor_upsert": 2,
     "mor_delete": 2,
+    # MERGE INTO rows counted inside the whole module before the COW
+    # rewrite and the MOR delta shared one WHEN-clause resolver
+    "mor_merge_into": 15,
+    "mor_merge_into_insert_collision": 21,
+    "cow_merge_by_source_delete": 7,
+    "mor_merge_by_source_delete": 10,
     # file indexes, counted before record, secondary and expression
     # indexes were folded onto one build/prune module
     "record_index_build_full": 2,
@@ -3051,8 +3057,14 @@ JOB_BUDGETS = {
     "wide_upsert": 6,
 }
 # Spark tasks of the key-probe rows, counted like their jobs (before,
-# run alone: 25, 32 and 28), and of the wide-table rows.
+# run alone: 25, 32 and 28), of the wide-table rows, and of the new
+# MERGE INTO rows (three whole-module runs before the shared resolver
+# agreed on each).
 TASK_BUDGETS = {
+    "mor_merge_into": 113,
+    "mor_merge_into_insert_collision": 191,
+    "cow_merge_by_source_delete": 26,
+    "mor_merge_by_source_delete": 68,
     "bloom_upsert": 24,
     "bucket_upsert": 31,
     "range_pruned_upsert": 23,
@@ -3121,6 +3133,7 @@ def test_commit_job_budgets(spark, tmp_path):
     )
     upd = [("update", None, {"val": "s.val"})]
     ins = [("insert", None, None)]
+    by_src = [("delete", "t.id > 55", None)]
     calls = {
         "cow_upsert": lambda: cow.upsert(rows((5, 2, "u"), (100, 1, "n"))),
         "cow_merge_delete_flag": lambda: cow.merge(
@@ -3151,9 +3164,26 @@ def test_commit_job_budgets(spark, tmp_path):
             rows((11, 9, "c")), "t.id = s.id AND t.ver = s.ver",
             matched=upd, not_matched=ins,
         ),
+        "cow_merge_by_source_delete": lambda: cow.merge_into(
+            rows((1, 2, "b")), "t.id = s.id", not_matched_by_source=by_src,
+        ),
         "mor_upsert": lambda: mor.upsert(rows((5, 2, "u"), (100, 1, "n"))),
         "mor_delete": lambda: mor.delete(
             spark.createDataFrame([(7,)], "id long")
+        ),
+        "mor_merge_into": lambda: mor.merge_into(
+            rows((10, 3, "q"), (200, 1, "r")), "t.id = s.id",
+            matched=upd, not_matched=ins,
+        ),
+        # key 10 no longer has val 'v': its source row is unmatched and
+        # inserts a key the table holds, next to a delete and an update
+        "mor_merge_into_insert_collision": lambda: mor.merge_into(
+            rows((10, 4, "c"), (12, 2, "x"), (13, 2, "k")),
+            "t.id = s.id AND t.val = 'v'",
+            matched=[("delete", "s.val = 'x'", None), *upd], not_matched=ins,
+        ),
+        "mor_merge_by_source_delete": lambda: mor.merge_into(
+            rows((1, 2, "b")), "t.id = s.id", not_matched_by_source=by_src,
         ),
         "record_index_build_full": lambda: svc.build_record_index(),
         "secondary_index_build_full": lambda: svc.build_secondary_index(
@@ -3211,6 +3241,11 @@ def test_commit_job_budgets(spark, tmp_path):
     assert rows_of(mor.snapshot().where("id IN (5, 7)"), "id", "val") == [
         (5, "u")
     ]
+    for t in (cow, mor):
+        assert t.snapshot().where("id > 55").count() == 0
+    assert rows_of(
+        mor.snapshot().where("id IN (10, 12, 13)"), "id", "val"
+    ) == [(10, "c"), (13, "k")]
     # each index pruned the read it served down to one of four files
     live = indexed.current_files()
     assert len(live) == 4
