@@ -43,6 +43,7 @@ InProcessLockProvider setup (``create_hudi_tables.py:181-182``).
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import posixpath
 import re
@@ -1126,11 +1127,12 @@ class Table:
             else []
         )
         if begin is None:
-            out = new.withColumn("_change_type", F.lit("insert"))
             types = dict(new.dtypes)
-            for c in before:
-                out = out.withColumn(f"{c}_before", F.lit(None).cast(types[c]))
-            return out
+            return new.select(
+                *[new[c] for c in new.columns],
+                *[F.lit(None).cast(types[c]).alias(f"{c}_before") for c in before],
+                F.lit("insert").alias("_change_type"),
+            )
         old = self.snapshot(as_of=begin).select(
             F.col(self.key).alias("_old_key"),
             F.col(META_COL).alias("_old_commit"),
@@ -1359,7 +1361,7 @@ class Table:
         :meth:`_collect_stats`) become the file's ``FileStatus``, so the
         scan makes no storage call. An entry without them (manifests
         written before they were recorded, files whose footer could not
-        be read) is stat'ed once through ``self.fs`` here.
+        be read) is stat'ed once (:meth:`_entry_status`).
 
         With a non-identity ``mapping`` (files written before a rename)
         the scan schema uses the PHYSICAL names and a projection aliases
@@ -1373,15 +1375,7 @@ class Table:
         scan_schema = schema
         if not identity:
             scan_schema, alias_cols = self._mapping_scan_parts(schema, mapping)
-        files = []
-        for e in entries:
-            path = e["path"] if e.get("external") else self._abs(e["path"])
-            status = (e.get("size"), e.get("mtime"))
-            if None in status:
-                status = self.fs.status(path)
-                if status is None:
-                    raise FileNotFoundError(f"live file {path} is missing")
-            files.append((path, *status))
+        files = [self._entry_status(e) for e in entries]
         df = _manifest_scan(self.spark, files, base, scan_schema)
         if with_file:
             # _metadata resolves on the scan relation, not through a
@@ -1395,6 +1389,18 @@ class Table:
                 cols.append(F.col("_file"))
             df = df.select(*cols)
         return df
+
+    def _entry_status(self, e: dict) -> tuple[str, int, int]:
+        """``(absolute path, bytes, mtime in epoch ms)`` of a manifest
+        entry: its recorded ``size`` and ``mtime``, or one stat through
+        ``self.fs`` for an entry written before they were recorded."""
+        path = e["path"] if e.get("external") else self._abs(e["path"])
+        status = (e.get("size"), e.get("mtime"))
+        if None in status:
+            status = self.fs.status(path)
+            if status is None:
+                raise FileNotFoundError(f"live file {path} is missing")
+        return (path, *status)
 
     def _group_by_mapping(
         self,
@@ -1816,7 +1822,8 @@ class Table:
            predicate) — rows it leaves alone keep their original
            ``_commit_time`` — and union the new rows (for an upsert, the
            batch deduped by max(precombine) per key);
-        4. write the result as the new commit's files and publish a
+        4. write the result as the new commit's files, sized to one
+           Spark read split each (see :meth:`_rewrite`), and publish a
            manifest that adds them and removes the touched files
            (manifest-last = atomic publish).
 
@@ -3000,8 +3007,8 @@ class Table:
             # feeds the cardinality gate, the clause resolution AND the
             # not-matched anti-join — persist it once for the statement
             # instead of re-running the window shuffle per consumer
-            # (measured 4.2 s → ~2 s at sf0.1). Released after merge()
-            # publishes, by which point every consumer has evaluated.
+            # (measured 4.2 s → ~2 s at sf0.1). Released after the delta
+            # commit publishes, by which point every consumer has evaluated.
             from pyspark import StorageLevel
 
             snap_df = (
@@ -3027,7 +3034,7 @@ class Table:
                     else None
                 )
                 # the claimed rows (updated full rows and tombstones) and
-                # the inserts land as ONE delta commit through merge()
+                # the inserts land as ONE delta commit (_merge_write)
                 eff = None
                 if families:
                     ins_keys = _colliding_keys(ins) if ins is not None else None
@@ -3036,8 +3043,25 @@ class Table:
                         .where("__mi_hit")
                         .drop("__mi_hit")
                     )
+                    if has_delete and any(
+                        kind == "update"
+                        for _ci, clauses in families
+                        for kind, *_ in clauses
+                    ):
+                        # updated and deleted claimed rows feed the upsert
+                        # and the tombstone branch: resolve them once
+                        # (_publish releases them)
+                        eff = eff.persist(StorageLevel.MEMORY_AND_DISK)
+                        self._pending_unpersist.append(eff)
                 if ins is not None:
-                    ins = ins.withColumn("__mi_del", F.lit(False))
+                    # the claimed rows are one per key (the cardinality
+                    # gate or the membership frame) and hold no insert
+                    # key (the collision anti-join), so only the inserts
+                    # need the max(precombine) dedup: gated first, as in
+                    # the COW branch
+                    ins = self._dedup_batch(
+                        self._gate_constraints(ins)
+                    ).withColumn("__mi_del", F.lit(False))
                     eff = ins if eff is None else eff.unionByName(ins)
                 if eff is None:
                     commit = self._next_commit()
@@ -3048,7 +3072,12 @@ class Table:
                         table_schema if evolved else None,
                     )
                     return commit
-                return self.merge(eff, delete_col="__mi_del")
+                # no merge(): its persist guards a source that could
+                # change between the two branches' reads, and eff comes
+                # from the statement's persisted source and snapshot
+                return self._merge_write(
+                    eff, "merge", delete_col="__mi_del", dedup=False
+                )
             finally:
                 snap_df.unpersist()
 
@@ -3124,8 +3153,7 @@ class Table:
             # Duplicate unmatched keys in the source must collapse to
             # ONE inserted row (max precombine, the upsert contract) —
             # inserting both would break the keyed snapshot invariant.
-            # The MOR branch gets this via merge()'s _dedup_batch; give
-            # the COW insert set the same treatment. Inserts are NEW
+            # Both branches dedup their insert set alone. Inserts are NEW
             # rows entering the table, so the write-side constraint
             # gate applies to them (the rewritten rows stay ungated —
             # quarantining rows the table already owns on a rewrite
@@ -3835,17 +3863,20 @@ class Table:
         delete_col: str | None = None,
         batch_id: str | None = None,
         sink_id: str | None = None,
+        dedup: bool = True,
     ) -> str:
-        """The keyed write behind upsert, merge and apply_cdc_feed:
-        ``source`` rows upsert, and with ``delete_col`` the rows whose
-        flag is true delete their key instead (a NULL flag is not a
-        delete — MERGE INTO semantics). COW rewrites through the kernel
-        (see :meth:`upsert`); MOR appends one delta commit."""
+        """The keyed write behind upsert, merge, apply_cdc_feed and MOR
+        MERGE INTO: ``source`` rows upsert, and with ``delete_col`` the
+        rows whose flag is true delete their key instead (a NULL flag is
+        not a delete — MERGE INTO semantics). COW rewrites through the
+        kernel (see :meth:`upsert`); MOR appends one delta commit.
+        ``dedup=False`` skips the max(precombine) dedup, for a caller
+        whose upsert rows are already one per key."""
         upserts, tomb_keys = source, None
         if delete_col is not None:
             flag = F.coalesce(F.col(delete_col), F.lit(False))
             upserts = source.where(~flag).drop(delete_col)
-        df, commit, batch = self._stage_batch(upserts)
+        df, commit, batch = self._stage_batch(upserts, dedup=dedup)
         if delete_col is not None:
             tomb_keys = source.where(flag).select(self.key)
         if self.table_type == "mor":
@@ -3956,7 +3987,21 @@ class Table:
         files, union ``new_rows``, write, and publish a manifest that
         removes the touched files (plus ``removed``, files retired
         without a read). A commit with nothing to write publishes an
-        empty, schema-less manifest."""
+        empty, schema-less manifest.
+
+        The output is written as files the size Spark reads them: it is
+        coalesced to ``ceil(est / split)`` partitions, ``est`` being the
+        touched files' bytes plus the optimizer's size estimate of
+        ``new_rows`` and ``split`` Spark's own read-split size
+        (``FilePartition.maxSplitBytes``), so every written file is one
+        read split. A small table stays one file; a commit past
+        ``openCostInBytes`` per core keeps at least one file per core; an
+        unknown estimate leaves the output's partitioning as it is.
+        ``coalesce`` adds no exchange, so the commit's Spark jobs do not
+        change. Tables whose files already follow a layout rule keep
+        it: partitioned (one file set per partition value), bucket
+        (range-partitioned by bucket) and ``max_records_per_file``
+        tables."""
         out = new_rows
         if touched:
             kept = transform(self._read_entries(touched))
@@ -3969,6 +4014,30 @@ class Table:
         if out is None:
             self._publish(commit, action, [], removed, None, **publish_kw)
             return commit
+        if not (
+            self.meta.get("partition_fields")
+            or self._bucket_count()
+            or self.meta.get("max_records_per_file")
+        ):
+            est = sum(self._entry_status(e)[1] for e in touched)
+            if new_rows is not None:
+                plan = new_rows._jdf.queryExecution().optimizedPlan()
+                est += int(plan.stats().sizeInBytes())
+            conf = self.spark._jsparkSession.sessionState().conf()
+            cores = conf.filesMinPartitionNum()
+            cores = (
+                cores.get()
+                if cores.isDefined()
+                else self.spark.sparkContext.defaultParallelism
+            )
+            split = min(
+                conf.filesMaxPartitionBytes(),
+                max(conf.filesOpenCostInBytes(), est / cores),
+            )
+            n = math.ceil(est / split)
+            # an unknown estimate (Long.MaxValue) gives no usable count
+            if n < 2**31:
+                out = out.coalesce(max(1, n))
         added = self._write_files(out, commit)
         self._publish(commit, action, added, removed, out.schema, **publish_kw)
         return commit

@@ -80,6 +80,14 @@ def test_bucket_merge_prune_bounded_by_batch_buckets(spark, tpath):
     assert stats["buckets"] <= 3
     assert stats["kept"] <= stats["buckets"] + 1
     assert stats["kept"] < stats["candidates"]
+    # the rewrite keeps the bucket layout (range-partitioned by bucket,
+    # tight per-file bucket spans), not the read-split sizing
+    added = t._manifest(t.latest_commit())["files_added"]
+    assert len(added) == 3
+    assert all(
+        e["stats"][BUCKET_COL][1] - e["stats"][BUCKET_COL][0] <= 1
+        for e in added
+    )
     got = {
         r["k"]: r["v"]
         for r in t.snapshot().where(F.col("k").isin(5, 9999, 4242, 7)).collect()

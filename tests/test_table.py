@@ -312,6 +312,9 @@ def test_hive_style_partition_layout(spark, tpath):
     t.upsert(spark.createDataFrame([(1, 2, "Ohio")], "id long, ver long, state string"))
     removed = before - {e["path"] for e in t.current_files()}
     assert removed and all("state=Ohio" in p for p in removed)
+    # a partitioned table keeps its writer's layout (one file per
+    # partition value), not the rewrite's read-split sizing
+    assert len(t.current_files()) == 2
 
 
 def test_cleaner_respects_retirement_window(spark, tpath):
@@ -554,6 +557,18 @@ def test_cdc_changes_insert_update_delete(spark, tpath):
     assert ch == {2: ("update", "b2"), 3: ("delete", None), 9: ("insert", "new")}
     # unchanged key 1 absent; begin=None → everything is an insert
     assert {r["_change_type"] for r in t.changes(begin=None).collect()} == {"insert"}
+
+
+def test_cdc_changes_full_column_order_independent_of_begin(spark, tpath):
+    t = make_table(spark, tpath)
+    c1 = t.upsert(df_of(spark, [(1, 1, "a"), (2, 1, "b")]))
+    t.upsert(df_of(spark, [(2, 2, "b2"), (3, 1, "c")]))
+    cols = t.changes_full(begin=c1).columns
+    assert t.changes_full(begin=None).columns == cols
+    assert cols[-2:] == ["val_before", "_change_type"]
+    full = t.changes_full(begin=None)
+    assert {r["_change_type"] for r in full.collect()} == {"insert"}
+    assert full.where("val_before IS NOT NULL").count() == 0
 
 
 def test_zorder_compaction_tightens_both_columns(spark, tpath):
@@ -1716,6 +1731,16 @@ def test_read_where_prunes_files_vs_naive_attach(spark, tpath):
     point = t.read_where("id = 42 AND val = 'v42'")
     assert len(point.inputFiles()) <= len(pruned.inputFiles())
     assert rows_of(point, "id") == [(42,)]
+    # a max_records_per_file table keeps one write task per touched
+    # file and per batch partition (the kept rows, then the 2 batch
+    # rows), not the rewrite's read-split sizing (one task)
+    [n42] = [
+        e["rows"] for e in t.current_files()
+        if e["stats"]["id"][0] <= 42 <= e["stats"]["id"][1]
+    ]
+    t.upsert(df_of(spark, [(42, 2, "n42"), (1000, 1, "new")]))
+    added = t._manifest(t.latest_commit())["files_added"]
+    assert sorted(e["rows"] for e in added) == sorted([n42 - 1, 2])
 
 
 def test_attach_where_binds_pruned_view(spark, tpath):
@@ -3023,12 +3048,13 @@ JOB_BUDGETS = {
     "cow_merge_into_insert_collision": 12,
     "mor_upsert": 2,
     "mor_delete": 2,
-    # MERGE INTO rows counted inside the whole module before the COW
-    # rewrite and the MOR delta shared one WHEN-clause resolver
-    "mor_merge_into": 15,
-    "mor_merge_into_insert_collision": 21,
+    # MERGE INTO rows counted inside the whole module; the MOR rows
+    # after MOR MERGE INTO stopped deduping its claimed rows (before:
+    # 15, 18 and 9)
+    "mor_merge_into": 10,
+    "mor_merge_into_insert_collision": 18,
     "cow_merge_by_source_delete": 7,
-    "mor_merge_by_source_delete": 10,
+    "mor_merge_by_source_delete": 5,
     # file indexes, counted before record, secondary and expression
     # indexes were folded onto one build/prune module
     "record_index_build_full": 2,
@@ -3057,14 +3083,21 @@ JOB_BUDGETS = {
     "wide_upsert": 6,
 }
 # Spark tasks of the key-probe rows, counted like their jobs (before,
-# run alone: 25, 32 and 28), of the wide-table rows, and of the new
-# MERGE INTO rows (three whole-module runs before the shared resolver
-# agreed on each).
+# run alone: 25, 32 and 28), of the wide-table rows, of the MERGE INTO
+# rows (MOR before the claimed rows' dedup went: 113, 127 and 68), and
+# of three COW rewrites counted after the rewrite coalesced its output
+# to the read-split count (before, inside the whole module: 22, 16 and
+# 26), so that files per commit cannot creep back. Like its job count,
+# the delete issues one task more inside the whole suite (17) than
+# inside the module (16); the budget is the larger count.
 TASK_BUDGETS = {
-    "mor_merge_into": 113,
-    "mor_merge_into_insert_collision": 191,
+    "cow_upsert": 22,
+    "cow_delete": 17,
+    "cow_merge_into": 25,
+    "mor_merge_into": 53,
+    "mor_merge_into_insert_collision": 122,
     "cow_merge_by_source_delete": 26,
-    "mor_merge_by_source_delete": 68,
+    "mor_merge_by_source_delete": 28,
     "bloom_upsert": 24,
     "bucket_upsert": 31,
     "range_pruned_upsert": 23,
@@ -3327,6 +3360,56 @@ def test_cow_rewrite_publishes_no_empty_file(spark, tpath):
         (4, "v"), (5, "u"), (6, "v")
     ]
     assert t.snapshot().count() == 21
+
+
+def test_cow_rewrite_writes_read_split_sized_files(spark, tpath):
+    """A COW commit coalesces its output to Spark's read-split count, so
+    a small unpartitioned table stays one file whatever the
+    partitioning of the frames written into it: the first load, upserts,
+    delete, update_where and merge_into each leave one live file."""
+    t = make_table(spark, tpath)
+    model = {}
+
+    def upsert(lo, hi, ver):
+        t.upsert(
+            spark.range(lo, hi).repartition(4)
+            .selectExpr("id", f"{ver}L AS ver", f"'u{ver}' AS val")
+        )
+        model.update({i: (ver, f"u{ver}") for i in range(lo, hi)})
+
+    def one_file():
+        return len(t.current_files()) == 1
+
+    upsert(0, 200, 1)
+    assert one_file()
+    upsert(150, 300, 2)
+    assert one_file()
+    upsert(290, 400, 3)
+    assert one_file()
+    t.delete(spark.createDataFrame([(3,), (160,), (399,)], "id long"))
+    for k in (3, 160, 399):
+        del model[k]
+    assert one_file()
+    t.update_where({"val": "'w'"}, "id >= 100 AND id < 120")
+    for k in range(100, 120):
+        model[k] = (model[k][0], "w")
+    assert one_file()
+    src = spark.createDataFrame(
+        [(k, 9, f"m{k}") for k in (5, 250, 500, 501)],
+        "id long, ver long, val string",
+    ).repartition(4)
+    t.merge_into(
+        src, "t.id = s.id",
+        matched=[("update", None, {"val": "s.val"})],
+        not_matched=[("insert", None, None)],
+    )
+    for k in (5, 250):
+        model[k] = (model[k][0], f"m{k}")
+    for k in (500, 501):
+        model[k] = (9, f"m{k}")
+    assert one_file()
+    got = {r["id"]: (r["ver"], r["val"]) for r in t.snapshot().collect()}
+    assert got == model
 
 
 def test_rewrite_family_cow_matches_mor(spark, tmp_path):
