@@ -277,6 +277,84 @@ def _manifest_scan(
     return DataFrame(js.baseRelationToDataFrame(relation), spark)
 
 
+# Physical operators a coalesce can pull into fewer tasks without
+# serializing real work (see _read_split_sized): a stage of only these,
+# over file scans, literal rows, shuffles and broadcasts, does per-row
+# work no heavier than the read under it.
+_ROW_OPS = frozenset({
+    "ProjectExec", "FilterExec", "UnionExec", "ColumnarToRowExec",
+    "InputAdapter", "WholeStageCodegenExec", "BroadcastHashJoinExec",
+})
+_STAGE_INPUTS = frozenset({
+    "ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec",
+    "FileSourceScanExec", "LocalTableScanExec",
+})
+_AGGREGATES = frozenset({
+    "HashAggregateExec", "SortAggregateExec", "ObjectHashAggregateExec",
+})
+
+
+def _last_stage_is_light(df: DataFrame) -> bool:
+    """Whether the last stage of ``df``'s plan — the operators between
+    its output and the shuffles, broadcasts and scans under them — only
+    reads its input: file and literal scans, row-wise projections and
+    filters, broadcast-join probes, and the final step of an aggregate
+    directly over its shuffle (the upsert dedup's). Anything else keeps
+    the stage's parallelism: a sort-merge join, a window, a generator,
+    a Python UDF, a scan of cached data (which may still have to be
+    computed), or an aggregate whose shuffle the planner dropped because
+    its input was already partitioned by the grouping key (the whole
+    upstream stage would then run in the coalesced tasks)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the initial plan, exchanges placed
+
+    def children(node):
+        kids = node.children()
+        return [kids.apply(i) for i in range(kids.size())]
+
+    def light(node) -> bool:
+        name = node.getClass().getSimpleName()
+        if name in _STAGE_INPUTS:
+            return True
+        if name in _AGGREGATES:
+            [child] = children(node)
+            if child.getClass().getSimpleName() == "SortExec":
+                [child] = children(child)
+            return child.getClass().getSimpleName() == "ShuffleExchangeExec"
+        return name in _ROW_OPS and all(light(c) for c in children(node))
+
+    return light(plan)
+
+
+def _read_split_sized(df: DataFrame, est: int) -> DataFrame:
+    """``df`` coalesced to ``ceil(est / split)`` partitions, ``split``
+    being Spark's own read-split size (``FilePartition.maxSplitBytes``:
+    ``min(maxPartitionBytes, max(openCostInBytes, est / minPartitionNum))``,
+    ``minPartitionNum`` defaulting to the default parallelism), so each
+    written file is about one read split of ``est`` bytes. ``coalesce``
+    adds no exchange. ``df`` is left as it is when the estimate is
+    unknown (Long.MaxValue) or when its last stage does more than read
+    (:func:`_last_stage_is_light`): the coalesce would run that work in
+    fewer tasks."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    cores = conf.filesMinPartitionNum()
+    cores = (
+        cores.get()
+        if cores.isDefined()
+        else spark.sparkContext.defaultParallelism
+    )
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(conf.filesOpenCostInBytes(), est / cores),
+    )
+    n = math.ceil(est / split)
+    if n >= 2**31 or not _last_stage_is_light(df):
+        return df
+    return df.coalesce(max(1, n))
+
+
 def _bootstrap_listing(src_fs, source_dir: str) -> list[str]:
     """The bootstrap adoption listing: every parquet file under the
     source at any depth (or the source itself when it IS a file)."""
@@ -1822,8 +1900,8 @@ class Table:
            predicate) — rows it leaves alone keep their original
            ``_commit_time`` — and union the new rows (for an upsert, the
            batch deduped by max(precombine) per key);
-        4. write the result as the new commit's files, sized to one
-           Spark read split each (see :meth:`_rewrite`), and publish a
+        4. write the result as the new commit's files, sized to about
+           one Spark read split each (see :meth:`_rewrite`), and publish a
            manifest that adds them and removes the touched files
            (manifest-last = atomic publish).
 
@@ -3034,7 +3112,7 @@ class Table:
                     else None
                 )
                 # the claimed rows (updated full rows and tombstones) and
-                # the inserts land as ONE delta commit (_merge_write)
+                # the inserts land as ONE delta commit
                 eff = None
                 if families:
                     ins_keys = _colliding_keys(ins) if ins is not None else None
@@ -3053,17 +3131,7 @@ class Table:
                         # (_publish releases them)
                         eff = eff.persist(StorageLevel.MEMORY_AND_DISK)
                         self._pending_unpersist.append(eff)
-                if ins is not None:
-                    # the claimed rows are one per key (the cardinality
-                    # gate or the membership frame) and hold no insert
-                    # key (the collision anti-join), so only the inserts
-                    # need the max(precombine) dedup: gated first, as in
-                    # the COW branch
-                    ins = self._dedup_batch(
-                        self._gate_constraints(ins)
-                    ).withColumn("__mi_del", F.lit(False))
-                    eff = ins if eff is None else eff.unionByName(ins)
-                if eff is None:
+                if eff is None and ins is None:
                     commit = self._next_commit()
                     # an evolving statement widens the schema even when
                     # it changes no rows (Delta semantics) — record it
@@ -3072,11 +3140,32 @@ class Table:
                         table_schema if evolved else None,
                     )
                     return commit
-                # no merge(): its persist guards a source that could
-                # change between the two branches' reads, and eff comes
-                # from the statement's persisted source and snapshot
-                return self._merge_write(
-                    eff, "merge", delete_col="__mi_del", dedup=False
+                # The claimed upserts and the inserts pass ONE constraint
+                # gate (tombstones are not gated), inserts before their
+                # dedup as in the COW branch. Only the inserts need the
+                # max(precombine) dedup: the claimed rows are one per key
+                # (the cardinality gate or the membership frame) and hold
+                # no insert key (the collision anti-join).
+                is_ins, tomb_keys, rows = F.col("__mi_ins"), None, []
+                if eff is not None:
+                    gone = F.coalesce(F.col("__mi_del"), F.lit(False))
+                    tomb_keys = eff.where(gone).select(self.key)
+                    rows.append(
+                        eff.where(~gone).drop("__mi_del")
+                        .withColumn("__mi_ins", F.lit(False))
+                    )
+                if ins is not None:
+                    rows.append(ins.withColumn("__mi_ins", F.lit(True)))
+                rows = rows[0] if len(rows) == 1 else rows[0].unionByName(rows[1])
+                self._validate_batch(rows.drop("__mi_ins"), need_precombine=False)
+                gated = self._gate_constraints(rows, carry=["__mi_ins"])
+                batch = gated.where(~is_ins).drop("__mi_ins")
+                if ins is not None:
+                    new = self._dedup_batch(gated.where(is_ins).drop("__mi_ins"))
+                    batch = new if eff is None else batch.unionByName(new)
+                commit = self._next_commit()
+                return self._delta_commit(
+                    commit, batch.withColumn(META_COL, F.lit(commit)), tomb_keys
                 )
             finally:
                 snap_df.unpersist()
@@ -3745,7 +3834,9 @@ class Table:
             raise ValueError(f"no quarantined rows at {qd}")
         return self.spark.read.parquet(qd)
 
-    def _gate_constraints(self, df: DataFrame) -> DataFrame:
+    def _gate_constraints(
+        self, df: DataFrame, carry: Sequence[str] = ()
+    ) -> DataFrame:
         """Delta-expectations-style ingest gate: evaluate every declared
         constraint (SQL boolean expr) per row; rows failing ANY — false
         or NULL, the strict ingest-quality reading, unlike SQL CHECK
@@ -3753,7 +3844,8 @@ class Table:
         the failed names, and only clean rows continue to the write.
         One extra pass over the batch (the quarantine write) only when
         violations exist; the flag evaluation itself fuses into the
-        batch's first projection."""
+        batch's first projection. ``carry`` names internal columns that
+        ride through to the clean rows but are not quarantined."""
         cons = self.meta.get("constraints") or {}
         if not cons:
             return df
@@ -3789,7 +3881,7 @@ class Table:
             (
                 bad.withColumn("_violation", F.array_join("_viol", ","))
                 .withColumn("_quarantined_at", F.lit(_utcnow()))
-                .drop("_viol")
+                .drop("_viol", *carry)
                 .write.mode("append")
                 .parquet(self._quarantine_dir())
             )
@@ -3863,20 +3955,17 @@ class Table:
         delete_col: str | None = None,
         batch_id: str | None = None,
         sink_id: str | None = None,
-        dedup: bool = True,
     ) -> str:
-        """The keyed write behind upsert, merge, apply_cdc_feed and MOR
-        MERGE INTO: ``source`` rows upsert, and with ``delete_col`` the
-        rows whose flag is true delete their key instead (a NULL flag is
-        not a delete — MERGE INTO semantics). COW rewrites through the
-        kernel (see :meth:`upsert`); MOR appends one delta commit.
-        ``dedup=False`` skips the max(precombine) dedup, for a caller
-        whose upsert rows are already one per key."""
+        """The keyed write behind upsert, merge and apply_cdc_feed:
+        ``source`` rows upsert, and with ``delete_col`` the rows whose
+        flag is true delete their key instead (a NULL flag is not a
+        delete — MERGE INTO semantics). COW rewrites through the kernel
+        (see :meth:`upsert`); MOR appends one delta commit."""
         upserts, tomb_keys = source, None
         if delete_col is not None:
             flag = F.coalesce(F.col(delete_col), F.lit(False))
             upserts = source.where(~flag).drop(delete_col)
-        df, commit, batch = self._stage_batch(upserts, dedup=dedup)
+        df, commit, batch = self._stage_batch(upserts)
         if delete_col is not None:
             tomb_keys = source.where(flag).select(self.key)
         if self.table_type == "mor":
@@ -3989,19 +4078,17 @@ class Table:
         without a read). A commit with nothing to write publishes an
         empty, schema-less manifest.
 
-        The output is written as files the size Spark reads them: it is
-        coalesced to ``ceil(est / split)`` partitions, ``est`` being the
-        touched files' bytes plus the optimizer's size estimate of
-        ``new_rows`` and ``split`` Spark's own read-split size
-        (``FilePartition.maxSplitBytes``), so every written file is one
-        read split. A small table stays one file; a commit past
-        ``openCostInBytes`` per core keeps at least one file per core; an
-        unknown estimate leaves the output's partitioning as it is.
-        ``coalesce`` adds no exchange, so the commit's Spark jobs do not
-        change. Tables whose files already follow a layout rule keep
-        it: partitioned (one file set per partition value), bucket
-        (range-partitioned by bucket) and ``max_records_per_file``
-        tables."""
+        The output is written as files the size Spark reads them
+        (:meth:`_write_files`): coalesced to ``ceil(est / split)``
+        partitions, ``split`` being Spark's read-split size and ``est``
+        the touched files' bytes plus the optimizer's size estimate of
+        ``new_rows`` (an estimate: the files' on-disk bytes are exact,
+        the new rows' are an upper bound). A small table stays one file.
+        The coalesce adds no exchange, so the commit's Spark jobs do not
+        change; it is skipped where it would pull real work into fewer
+        tasks (a sort-merge join, a window, an upstream stage whose
+        shuffle the dedup reuses). Partitioned, bucket and
+        ``max_records_per_file`` tables keep their own layout."""
         out = new_rows
         if touched:
             kept = transform(self._read_entries(touched))
@@ -4014,31 +4101,17 @@ class Table:
         if out is None:
             self._publish(commit, action, [], removed, None, **publish_kw)
             return commit
-        if not (
-            self.meta.get("partition_fields")
-            or self._bucket_count()
-            or self.meta.get("max_records_per_file")
-        ):
+
+        def size_est() -> int:
+            # the touched files' recorded bytes plus the optimizer's
+            # estimate of the new rows
             est = sum(self._entry_status(e)[1] for e in touched)
             if new_rows is not None:
                 plan = new_rows._jdf.queryExecution().optimizedPlan()
                 est += int(plan.stats().sizeInBytes())
-            conf = self.spark._jsparkSession.sessionState().conf()
-            cores = conf.filesMinPartitionNum()
-            cores = (
-                cores.get()
-                if cores.isDefined()
-                else self.spark.sparkContext.defaultParallelism
-            )
-            split = min(
-                conf.filesMaxPartitionBytes(),
-                max(conf.filesOpenCostInBytes(), est / cores),
-            )
-            n = math.ceil(est / split)
-            # an unknown estimate (Long.MaxValue) gives no usable count
-            if n < 2**31:
-                out = out.coalesce(max(1, n))
-        added = self._write_files(out, commit)
+            return est
+
+        added = self._write_files(out, commit, size_est=size_est)
         self._publish(commit, action, added, removed, out.schema, **publish_kw)
         return commit
 
@@ -4618,7 +4691,17 @@ class Table:
             .distinct(),
         )
 
-    def _write_files(self, df: DataFrame, commit: str, kind: str = "base") -> list[dict]:
+    def _write_files(
+        self, df: DataFrame, commit: str, kind: str = "base", size_est=None
+    ) -> list[dict]:
+        """Write ``df`` as one commit's files and return their manifest
+        entries. The table's layout rule picks the files: bucket tables
+        range-partition by bucket, partitioned tables write one file set
+        per partition value, and ``max_records_per_file`` caps rows per
+        file. A table with none of these writes read-split-sized files
+        (:func:`_read_split_sized`) when the caller passes ``size_est``,
+        a callable giving the frame's estimated bytes (the COW rewrite
+        does); otherwise the frame's partitioning stands."""
         # the write dir carries a per-ATTEMPT token: two writers racing
         # the same commit id then write disjoint directories, so the race
         # loser's data can never clobber the winner's files (the manifest
@@ -4667,6 +4750,9 @@ class Table:
             # co-locate partition values per file → one dir per value →
             # hive-style layout below + tight stats
             writer = df.repartition(*[F.col(c) for c in parts])
+        mrpf = int(self.meta.get("max_records_per_file") or 0)
+        if size_est is not None and not (nbuckets or parts or mrpf):
+            writer = _read_split_sized(df, size_est())
         w = writer.write.mode("overwrite")
         if parts:
             # hive-style partition directories (state=Ohio/...), matching
@@ -4676,7 +4762,6 @@ class Table:
             # columns from the layout, and snapshot scans prune by
             # directory before stats are even consulted.
             w = w.partitionBy(*parts)
-        mrpf = int(self.meta.get("max_records_per_file") or 0)
         if mrpf:
             w = w.option("maxRecordsPerFile", mrpf)
         w.parquet(out_dir)
