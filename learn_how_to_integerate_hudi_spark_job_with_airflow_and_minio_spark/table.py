@@ -355,6 +355,25 @@ def _read_split_sized(df: DataFrame, est: int) -> DataFrame:
     return df.coalesce(max(1, n))
 
 
+def _merge_join_if_unsized(df: DataFrame) -> DataFrame:
+    """``df`` as the side of a join: hinted to a sort-merge join when the
+    optimizer cannot size it, i.e. a leaf of its plan carries Spark's
+    default size (rows from a Python list or an RDD). Such a frame
+    plans a shuffle join, and AQE re-plans it at run time from the
+    shuffle map stages that have finished by then: a broadcast on some
+    runs (one more Spark job) and the sort-merge join on others. The
+    hint makes the plan the same on every run. A frame the optimizer
+    can size keeps the planner's choice."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    unsized = any(
+        int(leaves.apply(i).stats().sizeInBytes())
+        >= conf.defaultSizeInBytes()
+        for i in range(leaves.size())
+    )
+    return df.hint("merge") if unsized else df
+
+
 def _bootstrap_listing(src_fs, source_dir: str) -> list[str]:
     """The bootstrap adoption listing: every parquet file under the
     source at any depth (or the source itself when it IS a file)."""
@@ -3022,11 +3041,12 @@ class Table:
                 # MEMBERSHIP matters here (no clause reads source
                 # columns) — tag it with semi/anti joins, which never
                 # multiply rows.
+                member = _merge_join_if_unsized(src)
                 j = (
-                    aff.join(src, on_cond, "left_semi")
+                    aff.join(member, on_cond, "left_semi")
                     .withColumn("__mi_m", F.lit(True))
                     .unionByName(
-                        aff.join(src, on_cond, "left_anti").withColumn(
+                        aff.join(member, on_cond, "left_anti").withColumn(
                             "__mi_m", F.lit(False)
                         )
                     )
@@ -4051,7 +4071,7 @@ class Table:
             return []
         tagged = self._read_entries(candidates, with_file=True)
         tagged = (
-            tagged.join(hit, self.key, "left_semi")
+            tagged.join(_merge_join_if_unsized(hit), self.key, "left_semi")
             if isinstance(hit, DataFrame)
             else tagged.where(hit)
         )

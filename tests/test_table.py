@@ -3033,20 +3033,19 @@ def _count_jobs(spark, label, fn):
 # Spark jobs per commit type on the fixture below, as measured before the
 # COW commit paths were folded onto one rewrite kernel. A commit that
 # starts issuing more jobs fails here instead of in the next benchmark.
-# Run alone, delete and partial_update issue one job fewer (8 and 11)
-# than inside the whole suite (9 and 12); the budget is the larger
-# count. The extra job is a broadcast AQE adds at run time to the
-# touched-files semi-join when the key frame's size is unknown
-# (a createDataFrame batch), so the count follows stage timing, not
-# what earlier tests leave in the session.
+# Delete and partial_update were budgeted 9 and 12 while AQE could add a
+# broadcast at run time to the touched-files semi-join of a key frame
+# the optimizer cannot size (a createDataFrame batch; 8 and 11 without
+# it). That join, and the by-source MERGE INTO's membership joins, are
+# now planned as sort-merge joins, so the count is the same on every run.
 JOB_BUDGETS = {
     "cow_upsert": 10,
     "cow_merge_delete_flag": 8,
-    "cow_delete": 9,
+    "cow_delete": 8,
     "cow_delete_where_scan": 3,
     "cow_delete_where_partition": 0,
     "cow_update_where": 3,
-    "cow_partial_update": 12,
+    "cow_partial_update": 11,
     "cow_merge_into": 9,
     "cow_merge_into_insert_collision": 12,
     "mor_upsert": 2,
@@ -3056,9 +3055,7 @@ JOB_BUDGETS = {
     # 15, 18 and 9)
     "mor_merge_into": 10,
     "mor_merge_into_insert_collision": 18,
-    # 8 (27 tasks) when AQE adds its run-time broadcast, as for delete
-    # and partial_update above; the parent's code counts the same
-    "cow_merge_by_source_delete": 8,
+    "cow_merge_by_source_delete": 7,
     "mor_merge_by_source_delete": 5,
     # file indexes, counted before record, secondary and expression
     # indexes were folded onto one build/prune module
@@ -3093,17 +3090,16 @@ JOB_BUDGETS = {
 # of the COW upsert and MERGE INTO after the rewrite sized its output to
 # the read-split count (before, inside the whole module: 22 and 26; the
 # MERGE INTO now touches one larger file of a table holding 4 files
-# where there were 7). The delete gets no task row: the AQE join its
-# touched-files pass runs on a key frame of unknown size is chosen at
-# run time, and it issued 16 tasks inside the module and 17 inside the
-# whole suite with the same files. The files each COW commit writes
-# are pinned by test_cow_rewrite_writes_read_split_sized_files.
+# where there were 7), and of the COW delete (16 before, inside the
+# module). The files each COW commit writes are pinned by
+# test_cow_rewrite_writes_read_split_sized_files.
 TASK_BUDGETS = {
     "cow_upsert": 22,
+    "cow_delete": 16,
     "cow_merge_into": 27,
     "mor_merge_into": 53,
     "mor_merge_into_insert_collision": 122,
-    "cow_merge_by_source_delete": 27,
+    "cow_merge_by_source_delete": 26,
     "mor_merge_by_source_delete": 28,
     "bloom_upsert": 24,
     "bucket_upsert": 31,
@@ -3488,6 +3484,27 @@ def test_rewrite_sizing_leaves_stages_that_do_real_work(spark, tmp_path):
     cached = spark.read.parquet(path).persist()
     assert not _last_stage_is_light(cached.select("id", "val"))
     cached.unpersist()
+
+
+def test_join_side_of_unknown_size_keeps_its_sort_merge_join(spark, tmp_path):
+    """A key frame the optimizer cannot size (rows from a Python list)
+    is joined by sort-merge on every run, so AQE cannot turn the join
+    into a broadcast on some runs and not others; a frame read from
+    files keeps the planner's choice."""
+    from learn_how_to_integerate_hudi_spark_job_with_airflow_and_minio_spark.table import (
+        _merge_join_if_unsized,
+    )
+
+    path = str(tmp_path / "src")
+    spark.range(100).write.parquet(path)
+    a = spark.read.parquet(path)
+    keys = spark.createDataFrame([(7,), (8,)], "id long")
+    j = a.join(_merge_join_if_unsized(keys), "id", "left_semi")
+    assert sorted(r.id for r in j.collect()) == [7, 8]
+    final = j._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in final and "BroadcastHashJoin" not in final
+    sized = a.select("id")
+    assert _merge_join_if_unsized(sized) is sized
 
 
 def test_rewrite_family_cow_matches_mor(spark, tmp_path):
